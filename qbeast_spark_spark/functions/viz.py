@@ -20,12 +20,11 @@ a live server; this engine exports the same content dependency-free:
   cubes highlighted, maxWeight labels, the sampling summary inlined).
 
 Everything is metadata-bounded driver work over the snapshot — the
-same shape as ``index_metrics``; no data is scanned. On a format-2
-snapshot the block walk runs over the FileKernel arrays (one pandas
-groupby — the LazyFiles facade is never materialized, so the cached
-snapshot keeps its vectorized pruning path); parent links are derived
-arithmetically from the (depth, path-int) encoding instead of the
-reference's per-level O(n^2) prefix scan.
+same shape as ``index_metrics``; no data is scanned. The block walk
+runs over the FileKernel arrays (one pandas groupby — no base
+``IndexFile`` is built); parent links are derived arithmetically from
+the (depth, path-int) encoding instead of the reference's per-level
+O(n^2) prefix scan.
 """
 
 from __future__ import annotations
@@ -53,8 +52,8 @@ def _norm_arr(w):
 
 
 def _block_frame_from_kernel(kernel, revision_id: int):
-    """(block rows, file_meta) off the FileKernel arrays + its object
-    tail — no IndexFile materialization, no LazyFiles drop."""
+    """(block rows, file_meta) off the FileKernel base arrays + its
+    tail — no base IndexFile is built."""
     import pandas as pd
 
     m_file = kernel.alive & (kernel.revision_ids == revision_id)
@@ -69,34 +68,20 @@ def _block_frame_from_kernel(kernel, revision_id: int):
     file_meta = {p: (int(s), int(r)) for p, s, r in
                  zip(kernel.paths[m_file], kernel.sizes[m_file],
                      kernel.rows[m_file])}
-    df = pd.DataFrame(cols)
-    # the (small) post-checkpoint tail holds real IndexFile objects —
-    # reuse the object walk for it
-    tail_df, tail_meta = _block_frame_from_objects(
-        kernel.tail.values(), revision_id)
-    if len(tail_df):
-        df = pd.concat([df, tail_df], ignore_index=True)
-    file_meta.update(tail_meta)
-    return df, file_meta
-
-
-def _block_frame_from_objects(files, revision_id: int):
-    import pandas as pd  # noqa: F811 — lazy import in both frame builders
-
-    rows = [[], [], [], [], []]
-    file_meta = {}
-    for f in files:
+    # the tail holds IndexFile objects: append their blocks
+    tail = [[] for _ in cols]
+    for f in kernel.tail.values():
         if f.revision_id != revision_id:
             continue
         file_meta[f.path] = (f.size, f.rows)
         for b in f.blocks:
-            rows[0].append(b.cube)
-            rows[1].append(b.min_weight)
-            rows[2].append(b.max_weight)
-            rows[3].append(b.count)
-            rows[4].append(f.path)
-    return pd.DataFrame(dict(zip(
-        ("cube", "minw", "maxw", "count", "path"), rows))), file_meta
+            for col, v in zip(tail, (b.cube, b.min_weight, b.max_weight,
+                                     b.count, f.path)):
+                col.append(v)
+    if tail[0]:
+        cols = {k: np.concatenate([a, np.array(t, dtype=a.dtype)])
+                for (k, a), t in zip(cols.items(), tail)}
+    return pd.DataFrame(cols), file_meta
 
 
 def cube_tree(snapshot, revision_id: Optional[int] = None,
@@ -122,12 +107,7 @@ def cube_tree(snapshot, revision_id: Optional[int] = None,
             f"no revision {revision_id}; available: {sorted(revs)}")
     dims = rev.dims
 
-    kernel = getattr(snapshot.files, "kernel", None)
-    if kernel is not None:
-        df, file_meta = _block_frame_from_kernel(kernel, revision_id)
-    else:
-        df, file_meta = _block_frame_from_objects(
-            snapshot.files.values(), revision_id)
+    df, file_meta = _block_frame_from_kernel(snapshot.files, revision_id)
 
     cubes: Dict[str, Dict[str, Any]] = {}
     if len(df):

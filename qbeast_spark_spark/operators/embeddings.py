@@ -131,10 +131,9 @@ def quantized_topk(vectors, queries, k: int = 5,
     float step (widen, amax, /127 scale, floor-quantize, sqrt, the
     ((dot*sa)*sb) / ((sqrt(ii)*sa)*(sqrt(jj)*sb)) association) is the
     same IEEE-double op sequence NumPy applies elementwise, and
-    zero-norm vectors/queries yield NULL cosines (non-ANSI Divide
-    semantics: ranked last, never a NaN that would sort as a spurious
-    top-1; under Spark 4's default ANSI mode the expression lane raises
-    DIVIDE_BY_ZERO on such inputs instead), and NaN embedding values —
+    zero-norm vectors/queries yield NULL cosines in both lanes under
+    any ANSI setting (ranked last, never a NaN that would sort as a
+    spurious top-1), and NaN embedding values —
     which poison the float chain to NaN cosines in BOTH lanes and which
     Spark ranks ABOVE every double — are forwarded as unconditional
     top-k candidates in window id order, so the lanes agree on them
@@ -346,8 +345,11 @@ def _quantized_pairs_exprs(vectors, queries, vec_col, id_col,
                   F.lit(0).cast("long"), lambda acc, x: acc + x)
               .cast("double")) * F.col("_qs")))
     joined = spread(vq).crossJoin(F.broadcast(qq))
-    cos = (_idot(F.col("embedding_q8"), F.col("_qq8")).cast("double")
-           * F.col("q8_scale") * F.col("_qs")
-           / (F.col("_vn") * F.col("_qn")))
+    # try_divide: a zero-norm side yields NULL under ANSI too (plain
+    # Divide raises DIVIDE_BY_ZERO there), matching the kernel lane
+    cos = F.try_divide(
+        _idot(F.col("embedding_q8"), F.col("_qq8")).cast("double")
+        * F.col("q8_scale") * F.col("_qs"),
+        F.col("_vn") * F.col("_qn"))
     return joined.select(F.col(q_id_col), F.col(id_col),
                          F.round(cos, 6).alias("cos"))

@@ -498,9 +498,7 @@ def delete_rows(spark, path: str, filters=None,
     candidates, residual = qt._candidates_and_residual(filters, snap)
     _reject_nondeterministic(qt, snap, residual, "DELETE")
     if residual is None:
-        kernel = getattr(snap.files, "kernel", None)
-        rows = kernel.live_rows_sum() if kernel is not None \
-            else sum(f.live_rows for f in snap.files.values())
+        rows = snap.files.live_rows_sum()
         version = qt.log.commit(add=[], remove=list(snap.files.keys()),
                                 schema_json=snap.schema_json,
                                 data_change=True, operation="DELETE",

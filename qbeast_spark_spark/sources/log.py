@@ -29,13 +29,16 @@ multi-writer commits loudly instead of corrupting silently. Select via
 ``QBEAST_COMMIT_PUBLISHER`` environment variable.
 
 Checkpointing (the Delta `_last_checkpoint` pattern): every
-``CHECKPOINT_INTERVAL`` commits the committer also materializes the full
-replayed state to ``NNNNNNNNNNNN.checkpoint.json`` and points
-``_last_checkpoint`` at it, so snapshot construction replays at most
-``CHECKPOINT_INTERVAL`` commits regardless of table age — on a table with
-10^4 appends the driver cost drops from O(10^4) file reads to O(10).
+``CHECKPOINT_INTERVAL`` commits the committer also writes the full
+replayed state — the file list and cube weights/domains as parquet, the
+rest in ``NNNNNNNNNNNN.checkpoint.meta.json`` (sources/metadata.py) — and
+points ``_last_checkpoint`` at it, so snapshot construction replays at
+most ``CHECKPOINT_INTERVAL`` commits regardless of table age — on a table
+with 10^4 appends the driver cost drops from O(10^4) file reads to O(10).
 Checkpoints are derived state: losing one only costs a full replay, and
 commit JSONs are never deleted, so time travel to any version still works.
+Single-JSON ``NNNNNNNNNNNN.checkpoint.json`` checkpoints written by older
+engines stay readable; the next checkpoint replaces them.
 """
 
 from __future__ import annotations
@@ -50,6 +53,7 @@ from dataclasses import dataclass, field
 from typing import Any, Dict, List, Optional, Tuple
 
 from ..core.revision import Revision
+from .metadata import FileKernel, LazyCubeState
 
 __all__ = ["Block", "IndexFile", "Snapshot", "CommitLog",
            "ConcurrentModificationError", "CHECKPOINT_INTERVAL",
@@ -68,11 +72,6 @@ class ConcurrentModificationError(RuntimeError):
 
 LOG_DIR = "_qbeast_log"
 CHECKPOINT_INTERVAL = 10
-# auto checkpoint-format bar: at/above this many live files the
-# checkpoint goes columnar (format 2, sources/metadata.py) — measured
-# crossover in tools/metadata_soak.py; override per table with the
-# qbeast.checkpoint.format property ("json" | "parquet" | "auto")
-PARQUET_CHECKPOINT_MIN_FILES = 10_000
 
 
 def _write_cube_state_parquet(cube_weights: Dict[int, Dict[str, int]],
@@ -121,10 +120,8 @@ def _copy_forward_cube_state(cube_weights, cube_domains,
     that parquet plus the replay overlays — write it by file copy
     (no overlays) or one vectorized pandas merge (small overlays),
     never by materializing O(#cubes) Python dicts. Returns False when
-    the shape doesn't apply (JSON snapshots, materialized or reset
+    the shape doesn't apply (no parquet seed, materialized or reset
     state, unknown source) — caller falls back to the eager writer."""
-    from .metadata import LazyCubeState
-
     if not (isinstance(cube_weights, LazyCubeState)
             and isinstance(cube_domains, LazyCubeState)
             and cube_weights.is_lazy and cube_domains.is_lazy):
@@ -289,7 +286,8 @@ class Snapshot:
 
     table_path: str
     version: int = -1
-    files: Dict[str, IndexFile] = field(default_factory=dict)
+    # path -> IndexFile mapping, held columnar (sources/metadata.py)
+    files: FileKernel = field(default_factory=FileKernel.empty)
     revisions: Dict[int, Revision] = field(default_factory=dict)
     schema_json: Optional[str] = None
     properties: Dict[str, str] = field(default_factory=dict)
@@ -709,11 +707,13 @@ class CommitLog:
 
     def _last_checkpoint_info(self) -> Optional[Tuple[int, int]]:
         """(version, format) of the newest usable checkpoint, or None.
-        Format 1 = single JSON (files inline); format 2 = parquet file
-        table + small ``.checkpoint.meta.json`` (sources/metadata.py).
-        A format-2 table read by a PRE-format-2 engine degrades safely:
-        its ``_last_checkpoint_version`` finds no ``.checkpoint.json``
-        and replays the full JSON log — slow but correct."""
+        Format 2 = parquet file table + small ``.checkpoint.meta.json``
+        (sources/metadata.py), the only format written; format 1 =
+        single JSON (files inline), read for tables older engines
+        checkpointed. A format-2 table read by a PRE-format-2 engine
+        degrades safely: its ``_last_checkpoint_version`` finds no
+        ``.checkpoint.json`` and replays the full JSON log — slow but
+        correct."""
         lc = os.path.join(self.log_dir, "_last_checkpoint")
         if not os.path.exists(lc):
             return None
@@ -739,27 +739,19 @@ class CommitLog:
         info = self._last_checkpoint_info()
         return info[0] if info is not None else None
 
-    def _checkpoint_format_for(self, snap: Snapshot) -> int:
-        """The feature gate: table property ``qbeast.checkpoint.format``
-        = ``json`` | ``parquet`` | ``auto`` (default). Auto picks the
-        columnar format once the file count clears
-        ``PARQUET_CHECKPOINT_MIN_FILES`` — below it the single JSON
-        stays trivially greppable and costs nothing."""
-        fmt = (snap.properties or {}).get("qbeast.checkpoint.format",
-                                          "auto")
-        if fmt == "json":
-            return 1
-        if fmt == "parquet":
-            return 2
-        return 2 if len(snap.files) >= PARQUET_CHECKPOINT_MIN_FILES else 1
-
     def _write_checkpoint(self, snap: Snapshot) -> None:
         """Materialize ``snap`` (derived state — safe to lose) at its
         version; atomic via tmp+rename per artifact, last-writer-wins on
-        the pointer. Format 2 writes the O(#files) file table and the
-        O(#cubes) weight/domain state as PARQUET (columnar, one driver
-        core parses no JSON), keeping only the tiny remainder in
-        ``.checkpoint.meta.json``."""
+        the pointer. The O(#files) file table and the O(#cubes) weight/
+        domain state go to PARQUET (columnar, one driver core parses no
+        JSON); only the tiny remainder goes to ``.checkpoint.meta.json``."""
+        base = os.path.join(self.log_dir, f"{snap.version:012d}")
+        snap.files.to_parquet(base + ".checkpoint.parquet")
+        state_dst = base + ".checkpoint.state.parquet"
+        if not _copy_forward_cube_state(snap.cube_weights,
+                                        snap.cube_domains, state_dst):
+            _write_cube_state_parquet(snap.cube_weights,
+                                      snap.cube_domains, state_dst)
         small = {
             "version": snap.version,
             "revisions": {str(k): r.to_json()
@@ -768,44 +760,16 @@ class CommitLog:
             "properties": snap.properties,
             "txns": snap.txns,
             "protocol": snap.protocol,
+            "checkpointFormat": 2,
+            "numFiles": len(snap.files),
         }
-        fmt = self._checkpoint_format_for(snap)
-        base = os.path.join(self.log_dir, f"{snap.version:012d}")
-        if fmt == 2:
-            from .metadata import FileKernel, LazyFiles
-
-            kernel = snap.files.kernel \
-                if isinstance(snap.files, LazyFiles) else None
-            if kernel is not None:
-                kernel.to_parquet(base + ".checkpoint.parquet")
-            else:
-                FileKernel.parquet_from_files(
-                    snap.files, base + ".checkpoint.parquet")
-            state_dst = base + ".checkpoint.state.parquet"
-            if not _copy_forward_cube_state(snap.cube_weights,
-                                            snap.cube_domains, state_dst):
-                _write_cube_state_parquet(snap.cube_weights,
-                                          snap.cube_domains, state_dst)
-            small["checkpointFormat"] = 2
-            small["numFiles"] = len(snap.files)
-            tmp = base + ".checkpoint.meta.json.tmp"
-            with open(tmp, "w") as fh:
-                json.dump(small, fh, sort_keys=True)
-            os.replace(tmp, base + ".checkpoint.meta.json")
-        else:
-            state = dict(small)
-            state["files"] = [f.to_json() for f in snap.files.values()]
-            state["cubeWeights"] = {str(k): v for k, v
-                                    in snap.cube_weights.items()}
-            state["cubeDomains"] = {str(k): v for k, v
-                                    in snap.cube_domains.items()}
-            tmp = base + ".checkpoint.json.tmp"
-            with open(tmp, "w") as fh:
-                json.dump(state, fh, sort_keys=True)
-            os.replace(tmp, base + ".checkpoint.json")
+        tmp = base + ".checkpoint.meta.json.tmp"
+        with open(tmp, "w") as fh:
+            json.dump(small, fh, sort_keys=True)
+        os.replace(tmp, base + ".checkpoint.meta.json")
         lc_tmp = os.path.join(self.log_dir, "_last_checkpoint.tmp")
         with open(lc_tmp, "w") as fh:
-            json.dump({"version": snap.version, "format": fmt}, fh)
+            json.dump({"version": snap.version, "format": 2}, fh)
         os.replace(lc_tmp, os.path.join(self.log_dir, "_last_checkpoint"))
 
     def _seed_from_checkpoint(self, version: int) -> Snapshot:
@@ -813,6 +777,7 @@ class CommitLog:
                             f"{version:012d}.checkpoint.meta.json")
         if os.path.exists(meta):
             return self._seed_from_parquet_checkpoint(version, meta)
+        # read-only format-1 loader: the files seed an empty kernel's tail
         with open(os.path.join(self.log_dir,
                                f"{version:012d}.checkpoint.json")) as fh:
             state = json.load(fh)
@@ -834,19 +799,14 @@ class CommitLog:
 
     def _seed_from_parquet_checkpoint(self, version: int,
                                       meta_path: str) -> Snapshot:
-        """Format-2 seed: file state stays COLUMNAR (FileKernel behind a
-        LazyFiles facade — no per-file objects until a write path needs
-        them); weights/domains load from the state parquet."""
-        from .metadata import FileKernel, LazyFiles
-
+        """Format-2 seed: file state stays COLUMNAR (the kernel's base
+        arrays — no per-file objects until a caller asks for one);
+        weights/domains load from the state parquet."""
         with open(meta_path) as fh:
             state = json.load(fh)
-        from .metadata import LazyCubeState
-
         snap = Snapshot(self.table_path, version=state["version"])
         base = os.path.join(self.log_dir, f"{version:012d}")
-        snap.files = LazyFiles(
-            FileKernel.from_parquet(base + ".checkpoint.parquet"))
+        snap.files = FileKernel.from_parquet(base + ".checkpoint.parquet")
         # weights/domains stay lazy: the O(#cubes) dict build is the
         # dominant residual seed cost at 10^6 cubes and only WRITE
         # paths read them; post-checkpoint replay merges go to the
@@ -971,15 +931,11 @@ class CommitLog:
                 snap.cube_weights = {}
                 snap.cube_domains = {}
                 snap.revisions = {}
-            # discard (kernel-aware) never materializes the removed
-            # file's IndexFile — a big remove commit after a format-2
-            # seed stays O(#removed) mask flips, not object builds
-            _discard = getattr(snap.files, "discard", None)
+            # discard never builds the removed file's IndexFile — a big
+            # remove commit after a parquet seed stays O(#removed) mask
+            # flips, not object builds
             for p in commit.get("remove", []):
-                if _discard is not None:
-                    _discard(p)
-                else:
-                    snap.files.pop(p, None)
+                snap.files.discard(p)
             for fo in commit.get("add", []):
                 f = IndexFile.from_json(fo)
                 snap.files[f.path] = f

@@ -24,9 +24,8 @@ batches:
 4. optionally vacuum files dropped before ``vacuum_retention_hours``.
 
 Every step is itself a metadata-bounded driver decision: thresholds are
-evaluated against the snapshot — vectorized over FileKernel arrays on
-format-2 snapshots (sources/metadata.py), object-walked only on legacy
-JSON snapshots — never by scanning data."""
+evaluated against the snapshot — vectorized over its FileKernel arrays
+(sources/metadata.py) — never by scanning data."""
 
 from __future__ import annotations
 
@@ -38,54 +37,6 @@ from .log import CommitLog
 from .optimize import optimize_table
 
 __all__ = ["auto_maintain"]
-
-
-def _kernel(snap):
-    """FileKernel behind a format-2 snapshot's LazyFiles, if it is still
-    unmaterialized; None → fall back to the object walk (JSON snapshots,
-    or a snapshot some earlier caller already materialized)."""
-    return getattr(snap.files, "kernel", None)
-
-
-def _staging_rows(snap) -> int:
-    k = _kernel(snap)
-    if k is not None:
-        return k.staging_rows_sum(STAGING_REVISION_ID)
-    return sum(f.live_rows for f in snap.files.values()
-               if f.revision_id == STAGING_REVISION_ID)
-
-
-def _staging_paths(snap):
-    k = _kernel(snap)
-    if k is not None:
-        return k.paths_in_revision(STAGING_REVISION_ID)
-    return [f.path for f in snap.files.values()
-            if f.revision_id == STAGING_REVISION_ID]
-
-
-def _live_revisions(snap):
-    k = _kernel(snap)
-    if k is not None:
-        return k.live_revision_ids(STAGING_REVISION_ID)
-    return sorted({f.revision_id for f in snap.files.values()
-                   if f.revision_id != STAGING_REVISION_ID})
-
-
-def _old_revision_paths(snap, keep_rev: int):
-    k = _kernel(snap)
-    if k is not None:
-        return k.paths_excluding_revisions((STAGING_REVISION_ID, keep_rev))
-    return [f.path for f in snap.files.values()
-            if f.revision_id != STAGING_REVISION_ID
-            and f.revision_id != keep_rev]
-
-
-def _small_file_count(snap, small_file_bytes: int) -> int:
-    k = _kernel(snap)
-    if k is not None:
-        return k.small_file_count(small_file_bytes)
-    return sum(1 for f in snap.files.values()
-               if f.size < small_file_bytes)
 
 
 def auto_maintain(spark, path: str, *,
@@ -112,27 +63,29 @@ def auto_maintain(spark, path: str, *,
         return report
     snap = log.snapshot()
 
-    # Threshold checks stay on the kernel arrays (format-2 snapshots):
-    # a healthy table's policy check is O(arrays), never O(#files)
-    # IndexFile objects — file paths are listed only when a step fires.
-    if _staging_rows(snap) > max_staging_rows:
-        v = optimize_table(spark, path,
-                           file_paths=_staging_paths(snap),
-                           columns_to_index=columns_to_index)
+    # Threshold checks stay on the kernel arrays: a healthy table's
+    # policy check is O(arrays), never O(#files) IndexFile objects —
+    # file paths are listed only when a step fires.
+    if snap.files.staging_rows_sum(STAGING_REVISION_ID) > max_staging_rows:
+        v = optimize_table(
+            spark, path,
+            file_paths=snap.files.paths_in_revision(STAGING_REVISION_ID),
+            columns_to_index=columns_to_index)
         if v is not None:
             report["optimize_staging"] = v
             snap = log.snapshot()
 
-    live_revs = _live_revisions(snap)
+    live_revs = snap.files.live_revision_ids(STAGING_REVISION_ID)
     if len(live_revs) > max_revisions:
-        old_files = _old_revision_paths(snap, live_revs[-1])
+        old_files = snap.files.paths_excluding_revisions(
+            (STAGING_REVISION_ID, live_revs[-1]))
         v = optimize_table(spark, path, file_paths=old_files,
                            columns_to_index=columns_to_index)
         if v is not None:
             report["consolidate_revisions"] = v
             snap = log.snapshot()
 
-    if _small_file_count(snap, small_file_bytes) >= max_small_files:
+    if snap.files.small_file_count(small_file_bytes) >= max_small_files:
         v = compact_table(spark, path, target_file_bytes=target_file_bytes,
                           min_file_bytes=small_file_bytes)
         if v is not None:

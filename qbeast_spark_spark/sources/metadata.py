@@ -1,28 +1,28 @@
-"""Columnar metadata kernel — the 100-TB-file-count commit-log path.
+"""Columnar metadata kernel — the one in-memory form of a table's files.
 
 The reference rides Delta's parquet checkpoints and Spark-side log
 replay (delta/src/main/scala/io/qbeast/spark/delta/
 DeltaQbeastSnapshot.scala:45-297), so a table with 10^5-10^6 files never
 materializes its whole file list as per-file objects on one core. This
-engine's log is driver-side Python; the JSON checkpoint + per-file
-``IndexFile`` objects measured super-constant costs at that cardinality
-(tools/metadata_soak.py), so format-2 checkpoints store the file list as
-PARQUET and snapshots hold it as NumPy columns:
+engine's log is driver-side Python; checkpoints store the file list as
+PARQUET and ``Snapshot.files`` is always a ``FileKernel``:
 
-- ``FileKernel``: flat arrays (paths, sizes, rows, revision ids, per-
-  column stats min/max, flattened blocks with pre-parsed cube depth/
-  path ints) + a tombstone mask and a small object tail for the commits
-  replayed after the checkpoint. Pruning and sampling vectorize over
-  the arrays (sources/reader.py consumes them); single-file lookups
-  build one ``IndexFile`` on demand.
-- ``LazyFiles``: a dict facade over the kernel so ``Snapshot.files``
-  keeps its mapping contract. Key iteration, membership, length,
-  single-key get/set/pop run kernel-side; the first ``values()`` /
-  ``items()`` call materializes every ``IndexFile`` into the dict and
-  drops the kernel (the write/DML paths that walk whole files pay the
-  object cost only when they actually run).
+- base arrays: flat columns loaded from one checkpoint parquet (paths,
+  sizes, rows, revision ids, per-column stats min/max, flattened blocks
+  with pre-parsed cube depth/path ints) plus a tombstone mask. A log
+  with no checkpoint starts from empty base arrays.
+- ``tail``: every file added since the base arrays loaded, as
+  ``IndexFile`` objects in insertion order (the whole table for a log
+  replayed without a checkpoint).
 
-Old engines never mis-read a format-2 checkpoint: its small state lives
+Pruning, sampling and the maintenance/detail tallies vectorize over the
+base arrays and the cached tail arrays (sources/reader.py consumes
+them). The kernel is also the snapshot's path -> ``IndexFile`` mapping:
+single-file lookups build one base ``IndexFile`` on demand, and
+``values()``/``items()`` build each base file once through the same
+cache.
+
+Old engines never mis-read a parquet checkpoint: its small state lives
 in ``*.checkpoint.meta.json`` (not ``*.checkpoint.json``), so a legacy
 ``_last_checkpoint_version`` finds no checkpoint and falls back to the
 always-correct full JSON replay.
@@ -48,9 +48,11 @@ _STATS_MAX = "__stats_max"
 
 
 class FileKernel:
-    """Columnar snapshot file state. Base arrays come from one parquet
-    read; post-checkpoint replay lands in ``tail`` (adds, insertion-
-    ordered) and ``alive`` (tombstones). All arrays share base order."""
+    """Columnar snapshot file state and the snapshot's path ->
+    ``IndexFile`` mapping. Base arrays come from one parquet read (empty
+    without a checkpoint); replay adds land in ``tail`` (insertion-
+    ordered) and removes flip ``alive`` (tombstones). All base arrays
+    share base order."""
 
     def __init__(self, paths, sizes, rows, revision_ids, dv_json, dv_card,
                  blooms_json, stats, b_offsets, b_file, b_cube, b_depth,
@@ -77,13 +79,23 @@ class FileKernel:
         self.tail: Dict[str, "IndexFile"] = {}
         self._pathidx: Optional[Dict[str, int]] = None
         self._singles: Dict[str, "IndexFile"] = {}
-        self._tail_arrays = None    # cache, invalidated by add/remove
+        self._tail_arrays = None    # cache, invalidated by set/discard
+
+    @staticmethod
+    def empty() -> "FileKernel":
+        """No base arrays: the state of a log replayed without a
+        checkpoint, where every file lands in ``tail``."""
+        i64 = np.zeros(0, dtype=np.int64)
+        obj = np.zeros(0, dtype=object)
+        return FileKernel(obj, i64, i64, i64, obj, i64, obj, {},
+                          np.zeros(1, dtype=np.int64), i64, obj, i64,
+                          i64, i64, i64, i64)
 
     def tail_arrays(self):
-        """Vectorizable view of the post-checkpoint tail: (ordered file
-        list, file revision ids, per-block file idx / depth / path /
-        min weight / max weight). Cached — a snapshot's tail only
-        mutates during replay, and pruning may run many times after."""
+        """Vectorizable view of the tail: (ordered file list, file
+        revision ids, per-block file idx / depth / path / min weight /
+        max weight). Cached — a snapshot's tail only mutates during
+        replay, and pruning may run many times after."""
         if self._tail_arrays is None:
             files = list(self.tail.values())
             revs = np.array([f.revision_id for f in files],
@@ -118,20 +130,23 @@ class FileKernel:
     def __len__(self) -> int:
         return int(self.alive.sum()) + len(self.tail)
 
-    def contains(self, path: str) -> bool:
+    def __contains__(self, path: str) -> bool:
         if path in self.tail:
             return True
         i = self._idx(path)
         return i is not None and bool(self.alive[i])
 
-    def iter_paths(self) -> Iterator[str]:
+    def __iter__(self) -> Iterator[str]:
         alive = self.alive
         for i, p in enumerate(self.paths):
             if alive[i]:
                 yield p
         yield from self.tail
 
-    def get(self, path: str):
+    def keys(self) -> List[str]:
+        return list(self)
+
+    def get(self, path: str, default=None):
         f = self.tail.get(path)
         if f is not None:
             return f
@@ -140,10 +155,32 @@ class FileKernel:
             return f
         i = self._idx(path)
         if i is None or not self.alive[i]:
-            return None
-        f = self._build(i)
-        self._singles[path] = f
+            return default
+        f = self._singles[path] = self._build(i)
         return f
+
+    def __getitem__(self, path: str):
+        f = self.get(path)
+        if f is None:
+            raise KeyError(path)
+        return f
+
+    def values(self) -> List["IndexFile"]:
+        """Every live file, base order then tail; each base file is
+        built once and cached."""
+        singles = self._singles
+        out = []
+        for i in np.flatnonzero(self.alive):
+            p = self.paths[i]
+            f = singles.get(p)
+            if f is None:
+                f = singles[p] = self._build(int(i))
+            out.append(f)
+        out.extend(self.tail.values())
+        return out
+
+    def items(self) -> List[tuple]:
+        return list(zip(self, self.values()))
 
     def _build(self, i: int):
         from .log import Block, IndexFile
@@ -171,15 +208,18 @@ class FileKernel:
                          int(self.rows[i]), int(self.revision_ids[i]),
                          blocks, stats, blooms, dv)
 
-    def add(self, f) -> None:
-        i = self._idx(f.path)
+    def __setitem__(self, path: str, f) -> None:
+        i = self._idx(path)
         if i is not None:
             self.alive[i] = False
-            self._singles.pop(f.path, None)
-        self.tail[f.path] = f
+            self._singles.pop(path, None)
+        self.tail[path] = f
         self._tail_arrays = None
 
-    def remove(self, path: str) -> bool:
+    def discard(self, path: str) -> bool:
+        """Remove ``path`` if live, without building its IndexFile (log
+        replay removes 10^5-10^6 files on a big DELETE/optimize commit).
+        Returns whether it was live."""
         if self.tail.pop(path, None) is not None:
             self._tail_arrays = None
             return True
@@ -190,13 +230,14 @@ class FileKernel:
             return True
         return False
 
-    def materialize(self) -> Dict[str, "IndexFile"]:
-        out: Dict[str, "IndexFile"] = {}
-        for i in np.flatnonzero(self.alive):
-            p = self.paths[i]
-            out[p] = self._singles.get(p) or self._build(int(i))
-        out.update(self.tail)
-        return out
+    def pop(self, path: str, *default):
+        f = self.get(path)
+        if f is None:
+            if default:
+                return default[0]
+            raise KeyError(path)
+        self.discard(path)
+        return f
 
     # -- bulk accessors (reader-side vectorized pruning) -------------------
 
@@ -215,10 +256,9 @@ class FileKernel:
     # -- maintenance tallies (sources/maintenance.py policy checks) ---------
     #
     # auto_maintain runs on the streaming sink's hot path every
-    # ``maintain_every`` batches; at 10^6 files an object walk costs the
-    # full materialize_all price per policy check. Each tally is one
-    # vectorized pass over the base arrays plus an object walk of the
-    # (small, post-checkpoint) tail.
+    # ``maintain_every`` batches; at 10^6 files an object walk would
+    # build every base IndexFile per policy check. Each tally is one
+    # vectorized pass over the base arrays plus a walk of the tail.
 
     def staging_rows_sum(self, staging_id: int) -> int:
         """Live rows across staging-revision files."""
@@ -371,8 +411,8 @@ class FileKernel:
     def to_parquet(self, path: str) -> None:
         """Write current state (base minus tombstones, plus tail)
         without materializing base files into objects: the base half is
-        pure array slicing into arrow (no per-row Python), the small
-        tail goes through the object builder, and the two concatenate
+        pure array slicing into arrow (no per-row Python), the tail
+        goes through ``_files_arrow_table``, and the two concatenate
         with null-fill for columns only one side carries."""
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -423,18 +463,6 @@ class FileKernel:
                                     promote_options="default")
         tmp = path + ".tmp"
         pq.write_table(base, tmp, compression="snappy")
-        os.replace(tmp, path)
-
-    @staticmethod
-    def parquet_from_files(files: Dict[str, "IndexFile"],
-                           path: str) -> None:
-        """Write a format-2 files table straight from IndexFile objects
-        (the first parquet checkpoint of a previously-JSON table)."""
-        import pyarrow.parquet as pq
-
-        table = _files_arrow_table(files, None)
-        tmp = path + ".tmp"
-        pq.write_table(table, tmp, compression="snappy")
         os.replace(tmp, path)
 
 
@@ -703,142 +731,5 @@ class LazyCubeState(dict):
     __hash__ = None
 
     def __reduce__(self):
-        self._materialize()
-        return (dict, (dict(self),))
-
-
-class LazyFiles(dict):
-    """Dict facade over a FileKernel (see module docstring). The dict
-    part stays EMPTY while the kernel is active; whole-collection reads
-    (values/items) materialize once and drop the kernel."""
-
-    def __init__(self, kernel: FileKernel):
-        super().__init__()
-        self._kernel: Optional[FileKernel] = kernel
-
-    @property
-    def kernel(self) -> Optional[FileKernel]:
-        return self._kernel
-
-    def _materialize(self) -> None:
-        k = self._kernel
-        if k is not None:
-            self._kernel = None
-            super().update(k.materialize())
-
-    # -- reads -------------------------------------------------------------
-
-    def __len__(self):
-        k = self._kernel
-        return len(k) if k is not None else super().__len__()
-
-    def __bool__(self):
-        return len(self) > 0
-
-    def __contains__(self, p):
-        k = self._kernel
-        return k.contains(p) if k is not None else super().__contains__(p)
-
-    def __iter__(self):
-        k = self._kernel
-        return k.iter_paths() if k is not None else super().__iter__()
-
-    def __getitem__(self, p):
-        k = self._kernel
-        if k is None:
-            return super().__getitem__(p)
-        f = k.get(p)
-        if f is None:
-            raise KeyError(p)
-        return f
-
-    def get(self, p, default=None):
-        k = self._kernel
-        if k is None:
-            return super().get(p, default)
-        f = k.get(p)
-        return f if f is not None else default
-
-    def keys(self):
-        k = self._kernel
-        return list(k.iter_paths()) if k is not None else super().keys()
-
-    def values(self):
-        self._materialize()
-        return super().values()
-
-    def items(self):
-        self._materialize()
-        return super().items()
-
-    def __eq__(self, other):
-        self._materialize()
-        return dict(self) == other
-
-    def __ne__(self, other):
-        return not self.__eq__(other)
-
-    __hash__ = None
-
-    # -- writes ------------------------------------------------------------
-
-    def __setitem__(self, p, f):
-        k = self._kernel
-        if k is None:
-            super().__setitem__(p, f)
-        else:
-            k.add(f)
-
-    def __delitem__(self, p):
-        k = self._kernel
-        if k is None:
-            super().__delitem__(p)
-        elif not k.remove(p):
-            raise KeyError(p)
-
-    def pop(self, p, *default):
-        k = self._kernel
-        if k is None:
-            return super().pop(p, *default)
-        f = k.get(p)
-        if f is None:
-            if default:
-                return default[0]
-            raise KeyError(p)
-        k.remove(p)
-        return f
-
-    def discard(self, p) -> None:
-        """Remove ``p`` if present WITHOUT materializing its IndexFile —
-        log replay removes 10^5-10^6 files on a big DELETE/optimize
-        commit and discards pop()'s return value anyway (r9 review)."""
-        k = self._kernel
-        if k is None:
-            super().pop(p, None)
-        else:
-            k.remove(p)
-
-    def update(self, *args, **kw):
-        self._materialize()
-        super().update(*args, **kw)
-
-    def clear(self):
-        self._kernel = None
-        super().clear()
-
-    def setdefault(self, p, default=None):
-        cur = self.get(p)
-        if cur is not None:
-            return cur
-        self[p] = default
-        return default
-
-    def copy(self):
-        self._materialize()
-        return dict(self)
-
-    def __reduce__(self):
-        # pickling ships the materialized dict (kernels hold big arrays
-        # and never need to cross process boundaries)
         self._materialize()
         return (dict, (dict(self),))

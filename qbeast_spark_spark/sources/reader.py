@@ -329,25 +329,10 @@ class QbeastTable:
         from .constraints import constraints_of
 
         snap = self.snapshot(refresh=True)
-        small = 32 * 1024 * 1024
-        kernel = getattr(snap.files, "kernel", None)
-        if kernel is not None:
-            # format-2: one pass over the kernel arrays — detail() on a
-            # 10^6-file table must not materialize IndexFile objects
-            t = kernel.detail_tallies(STAGING_REVISION_ID, small)
-        else:
-            files = list(snap.files.values())
-            t = {
-                "numFiles": len(files),
-                "numRows": sum(f.live_rows for f in files),
-                "sizeInBytes": sum(f.size for f in files),
-                "numSmallFiles": sum(1 for f in files if f.size < small),
-                "numDV": sum(1 for f in files if f.dv),
-                "numStaging": sum(
-                    1 for f in files
-                    if f.revision_id == STAGING_REVISION_ID),
-                "revisions": {f.revision_id for f in files},
-            }
+        # one pass over the kernel arrays — detail() on a 10^6-file
+        # table must not build IndexFile objects
+        t = snap.files.detail_tallies(STAGING_REVISION_ID,
+                                      32 * 1024 * 1024)
         return {
             "location": self.path,
             "version": snap.version,
@@ -476,11 +461,8 @@ class QbeastTable:
         # superseded by later deletes or dropped by optimize rewrites go
         from .deletion_vectors import DVDescriptor, dv_abs_path
 
-        kernel = getattr(snap.files, "kernel", None)
-        dv_dicts = kernel.live_dvs() if kernel is not None \
-            else [f.dv for f in snap.files.values() if f.dv]
         live_dvs = set()
-        for dv in dv_dicts:
+        for dv in snap.files.live_dvs():
             p = dv_abs_path(self.path, DVDescriptor.from_json(dv))
             if p:
                 live_dvs.add(os.path.relpath(os.path.abspath(p),
@@ -719,9 +701,7 @@ class QbeastTable:
         if not (0.0 < precision):
             raise ValueError("precision must be > 0")
         snap = self.snapshot(refresh=True)
-        kernel = getattr(snap.files, "kernel", None)
-        total_rows = kernel.rows_sum() if kernel is not None \
-            else sum(f.rows for f in snap.files.values())
+        total_rows = snap.files.rows_sum()
         if total_rows == 0:
             return self.to_df(), 1.0
         pilot = (self.sample(min(max(pilot_fraction, 2000.0 / total_rows),
@@ -779,27 +759,18 @@ class QbeastTable:
         snap = snap or self.snapshot(refresh=True)
         w_to = fraction_to_weight(fraction)
         w_from = fraction_to_weight(lower_bound)
-        kernel = getattr(snap.files, "kernel", None)
-        if kernel is not None:
-            # columnar snapshot: one vectorized pass over the block
-            # weight arrays + the small object tail
-            bmask = kernel.alive[kernel.b_file] \
-                & (kernel.b_minw < w_to) & (kernel.b_maxw >= w_from)
-            selected = [kernel.paths[i]
-                        for i in np.unique(kernel.b_file[bmask])]
-            tfiles, _tr, tb_file, _td, _tp, tb_minw, tb_maxw = \
-                kernel.tail_arrays()
-            if len(tfiles):
-                tmask = (tb_minw < w_to) & (tb_maxw >= w_from)
-                selected += [tfiles[i].path
-                             for i in np.unique(tb_file[tmask])]
-            return selected
-        selected = []
-        for rel, f in snap.files.items():
-            for b in f.blocks:
-                if b.min_weight < w_to and b.max_weight >= w_from:
-                    selected.append(rel)
-                    break
+        # one vectorized pass over the base and the tail block weights
+        kernel = snap.files
+        bmask = kernel.alive[kernel.b_file] \
+            & (kernel.b_minw < w_to) & (kernel.b_maxw >= w_from)
+        selected = [kernel.paths[i]
+                    for i in np.unique(kernel.b_file[bmask])]
+        tfiles, _tr, tb_file, _td, _tp, tb_minw, tb_maxw = \
+            kernel.tail_arrays()
+        if len(tfiles):
+            tmask = (tb_minw < w_to) & (tb_maxw >= w_from)
+            selected += [tfiles[i].path
+                         for i in np.unique(tb_file[tmask])]
         return selected
 
     def prune_scan(self, filters):
@@ -1261,57 +1232,6 @@ def read_qbeast(spark, path: str,
     return qt.read(filters) if filters else qt.to_df()
 
 
-def prune_files(snap: Snapshot,
-                filters: Sequence[FilterTuple]) -> List[str]:
-    """Keep files having >= 1 block whose cube region intersects the
-    query space of the filters (QuerySpace.intersectsWith:81-97), then
-    apply per-file column-stats / Bloom skipping. Module-level (needs no
-    SparkSession) so the Python Data Source planner (sources/pyds.py)
-    prunes with the exact same logic as QbeastTable.
-
-    A format-2 (parquet-checkpoint) snapshot keeps its file state
-    columnar; the kernel path below computes the same keep set fully
-    vectorized — no per-file Python objects at 10^5-10^6 files."""
-    kernel = getattr(snap.files, "kernel", None)
-    if kernel is not None:
-        return _prune_kernel(kernel, snap, filters)
-    by_rev: Dict[int, List[Tuple[str, str]]] = {}
-    for rel, f in snap.files.items():
-        by_rev.setdefault(f.revision_id, []).extend(
-            (rel, b.cube) for b in f.blocks)
-
-    keep: set = set()
-    for rev_id, entries in by_rev.items():
-        rev = snap.revisions.get(rev_id)
-        if rev is None or rev.is_staging:
-            keep.update(rel for rel, _ in entries)  # cannot prune staging
-            continue
-        space = _query_space(rev, filters)
-        if space is None:  # no indexed-column predicate -> no pruning
-            keep.update(rel for rel, _ in entries)
-            continue
-        lo, hi = space
-        depths = np.array([_parse_cube(c)[0] for _, c in entries],
-                          dtype=np.int64)
-        paths = np.array([_parse_cube(c)[1] for _, c in entries],
-                         dtype=np.int64)
-        frm, to = cube_ranges(depths, paths, rev.dims)
-        inter = np.ones(len(entries), dtype=bool)
-        for i in range(rev.dims):
-            inter &= (frm[:, i] <= hi[i]) & (to[:, i] >= lo[i])
-        for j in np.flatnonzero(inter):
-            keep.add(entries[j][0])
-    # Delta-style data skipping on ANY column with recorded per-file
-    # [min, max] stats — prunes on non-indexed columns too — plus
-    # opt-in Bloom filters for string point lookups; both compose
-    # with the cube pruning above (intersection). blooms_exclude is a
-    # module-level import: a lazy import here would resolve by name in
-    # Spark's Python workers, where this package is not on sys.path.
-    return sorted(p for p in keep
-                  if not _stats_exclude(snap.files[p], filters)
-                  and not blooms_exclude(snap.files[p].blooms, filters))
-
-
 def _kernel_stats_cmp_ok(kind: str, val) -> bool:
     """Whether a filter literal is comparable against a stats column of
     ``kind`` with EXACTLY the scalar path's semantics: incomparable
@@ -1385,12 +1305,20 @@ def _kernel_clause_viol(kind, mns, mxs, present, op, val):
     return None
 
 
-def _prune_kernel(kernel, snap: Snapshot,
-                  filters: Sequence[FilterTuple]) -> List[str]:
-    """prune_files over a FileKernel: cube intersection vectorized on
-    the pre-parsed (depth, path) block arrays, stats skipping vectorized
-    per filter clause, Bloom checks only on the survivors, and the small
-    post-checkpoint object tail handled by the per-file scalar path."""
+def prune_files(snap: Snapshot,
+                filters: Sequence[FilterTuple]) -> List[str]:
+    """Keep files having >= 1 block whose cube region intersects the
+    query space of the filters (QuerySpace.intersectsWith:81-97), then
+    apply per-file column-stats / Bloom skipping. Module-level (needs no
+    SparkSession) so the Python Data Source planner (sources/pyds.py)
+    prunes with the exact same logic as QbeastTable.
+
+    Cube intersection is vectorized on the kernel's pre-parsed (depth,
+    path) block arrays, stats skipping vectorized per filter clause,
+    Bloom checks run only on the survivors, and the tail (files added
+    since the base arrays loaded) goes through the per-file scalar
+    stats check — no per-file Python objects at 10^5-10^6 files."""
+    kernel = snap.files
     alive = kernel.alive
     n = len(kernel.paths)
     keep_mask = np.zeros(n, dtype=bool)
@@ -1398,8 +1326,8 @@ def _prune_kernel(kernel, snap: Snapshot,
     for rid in np.unique(kernel.revision_ids[alive]):
         rid = int(rid)
         fmask = alive & (kernel.revision_ids == rid)
-        # object-path parity: only files with >= 1 block participate
-        # (a zero-block entry never lands in its by_rev `entries`)
+        # only files with >= 1 block participate (a zero-block file
+        # has no cube to intersect; the tail below agrees)
         blocked = np.unique(kernel.b_file[fmask[kernel.b_file]])
         rev = snap.revisions.get(rid)
         if rev is None or rev.is_staging:
@@ -1441,11 +1369,12 @@ def _prune_kernel(kernel, snap: Snapshot,
         if bj and blooms_exclude(json.loads(bj), filters):
             continue
         out.append(p)
-    # post-checkpoint tail: the files added since the last checkpoint,
-    # vectorized over the kernel's cached tail arrays (one cube_ranges
-    # call per revision — a per-file loop here measured as THE prune
-    # bottleneck at soak scale). Zero-block files never survive
-    # (object-path parity: they have no by_rev entries).
+    # tail: the files added since the base arrays loaded, vectorized
+    # over the kernel's cached tail arrays (one cube_ranges call per
+    # revision — a per-file loop here measured as THE prune bottleneck
+    # at soak scale). Zero-block files never survive. blooms_exclude is
+    # a module-level import: a lazy import here would resolve by name
+    # in Spark's Python workers, where this package is not on sys.path.
     tfiles, trevs, tb_file, tb_depth, tb_path, _tmin, _tmax = \
         kernel.tail_arrays()
     if len(tfiles):

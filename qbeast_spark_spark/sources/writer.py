@@ -50,6 +50,7 @@ from ..index.analyzer import (
 )
 from ..index.vectorized import LevelMap, assign_cubes
 from .log import Block, CommitLog, IndexFile
+from .metadata import FileKernel
 
 __all__ = ["write_qbeast"]
 
@@ -575,7 +576,7 @@ def _write_qbeast_inner(df, path: str, columns_to_index,
 
     pre_existing_files = list(snapshot.files.keys())
     if mode == "overwrite":
-        snapshot.files = {}
+        snapshot.files = FileKernel.empty()
         snapshot.cube_weights = {}
         snapshot.cube_domains = {}
         snapshot.revisions = {}

@@ -308,8 +308,8 @@ def test_log_checkpoint_bounds_replay(tmp_path):
                    cube_domains={1: {"0:0": 5.0}},
                    properties={f"k{i}": str(i)})
     ckpt_v = 2 * CHECKPOINT_INTERVAL
-    assert os.path.exists(
-        str(tmp_path / "t" / "_qbeast_log" / f"{ckpt_v:012d}.checkpoint.json"))
+    assert os.path.exists(str(tmp_path / "t" / "_qbeast_log"
+                              / f"{ckpt_v:012d}.checkpoint.meta.json"))
 
     # checkpointed snapshot == full replay (force full by dropping pointer)
     with_ckpt = log.snapshot()

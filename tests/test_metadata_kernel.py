@@ -1,13 +1,14 @@
-"""Format-2 (columnar) checkpoints + the FileKernel/LazyFiles metadata
-plane (sources/metadata.py) — the 100-TB-file-count path.
+"""Format-2 (columnar) checkpoints + the FileKernel metadata plane
+(sources/metadata.py) — the 100-TB-file-count path.
 
 The reference never materializes per-file objects on one core at high
 file counts (Delta parquet checkpoints + Spark-side replay,
 delta/src/main/scala/io/qbeast/spark/delta/DeltaQbeastSnapshot.scala:
-45-297); these tests pin that this engine's parquet checkpoint yields
-snapshots IDENTICAL to the JSON path — same files, same prune sets,
-same reads — while keeping the file state columnar until a write path
-genuinely needs objects."""
+45-297); these tests pin that a snapshot seeded from this engine's
+parquet checkpoint (files in the kernel's BASE ARRAYS) is IDENTICAL to
+a full JSON replay of the same log (every file in the kernel's TAIL) —
+same files, same prune sets, same tallies, same reads — and that the
+base half never builds per-file objects unless a caller asks for one."""
 
 import json
 import os
@@ -19,21 +20,20 @@ from pyspark.sql import functions as F
 import qbeast_spark_spark as qss
 from conftest import load
 from qbeast_spark_spark.sources.log import CommitLog
-from qbeast_spark_spark.sources.metadata import FileKernel, LazyFiles
+from qbeast_spark_spark.sources.metadata import FileKernel
 from qbeast_spark_spark.sources.reader import prune_files
 
 
 def _build_fmt2_table(spark, path, n_commits=11):
     """Real indexed table whose log ends in a format-2 checkpoint:
-    write n_commits appends with the parquet checkpoint format forced,
-    crossing the CHECKPOINT_INTERVAL=10 boundary."""
+    n_commits writes (one base write + appends), crossing the
+    CHECKPOINT_INTERVAL=10 boundary."""
     li = load(spark, "lineitem").limit(3000)
     qss.write(li, path, columns_to_index=["l_orderkey", "l_extendedprice"],
               cube_size=500)
     qt = qss.QbeastTable.for_path(spark, path)
-    qt.set_properties({"qbeast.checkpoint.format": "parquet"})
     chunk = li.limit(200)
-    for _ in range(n_commits - 2):
+    for _ in range(n_commits - 1):
         qss.write(chunk, path, columns_to_index=["l_orderkey",
                                                  "l_extendedprice"],
                   cube_size=500)
@@ -70,6 +70,19 @@ def _clone_fmt2(spark, dst):
     return qt, load(spark, "lineitem").limit(3000)
 
 
+def _seeded_and_replayed(path):
+    """The same log read twice: seeded from its parquet checkpoint (the
+    files sit in the kernel's base arrays) and by full JSON replay with
+    ``_last_checkpoint`` removed (every file in the kernel's tail)."""
+    seeded = CommitLog(path).snapshot()
+    assert len(seeded.files.paths) > 0, "no base arrays in play"
+    os.remove(os.path.join(path, "_qbeast_log", "_last_checkpoint"))
+    replayed = CommitLog(path).snapshot()
+    assert len(replayed.files.paths) == 0
+    assert len(replayed.files.tail) == len(seeded.files) > 0
+    return seeded, replayed
+
+
 def test_format2_checkpoint_real_table(spark, tmp_table):
     qt, li = _clone_fmt2(spark, tmp_table)
     log_dir = os.path.join(tmp_table, "_qbeast_log")
@@ -85,14 +98,14 @@ def test_format2_checkpoint_real_table(spark, tmp_table):
     with open(os.path.join(log_dir, "_last_checkpoint")) as fh:
         assert json.load(fh)["format"] == 2
     assert not os.path.exists(os.path.join(log_dir, v + ".checkpoint.json"))
-    # snapshot is kernel-backed and reads are exact
+    # the snapshot seeds the kernel's base arrays and reads are exact
     snap = qt.snapshot(refresh=True)
-    assert getattr(snap.files, "kernel", None) is not None
-    expect = 3000 + 200 * 9
+    assert isinstance(snap.files, FileKernel) and len(snap.files.paths)
+    expect = 3000 + 200 * 10
     assert qt.to_df().count() == expect
     got = qt.read([("l_orderkey", "<", 500)]).count()
     want = (li.where("l_orderkey < 500").count()
-            + 9 * li.limit(200).where("l_orderkey < 500").count())
+            + 10 * li.limit(200).where("l_orderkey < 500").count())
     assert got == want
 
 
@@ -101,13 +114,8 @@ def test_format2_snapshot_equals_full_replay(spark, tmp_table):
     replay — the exact state a legacy (pre-format-2) engine would build,
     since it cannot see the parquet checkpoint at all."""
     qt, _li = _clone_fmt2(spark, tmp_table)
-    log = CommitLog(tmp_table)
-    seeded = log.snapshot()
-    assert getattr(seeded.files, "kernel", None) is not None
     # legacy view: no usable checkpoint -> replay every commit JSON
-    os.remove(os.path.join(tmp_table, "_qbeast_log", "_last_checkpoint"))
-    legacy = CommitLog(tmp_table).snapshot()
-    assert getattr(legacy.files, "kernel", None) is None
+    seeded, legacy = _seeded_and_replayed(tmp_table)
     assert sorted(seeded.files.keys()) == sorted(legacy.files.keys())
     a = {p: f.to_json() for p, f in seeded.files.items()}
     b = {p: f.to_json() for p, f in legacy.files.items()}
@@ -119,16 +127,12 @@ def test_format2_snapshot_equals_full_replay(spark, tmp_table):
 
 
 def test_kernel_prune_equals_object_path(spark, tmp_table):
-    """prune_files over the kernel == prune_files over materialized
-    IndexFiles, across filter shapes (ranges, =, in, strings on
+    """prune_files over the kernel's base arrays (vectorized clauses)
+    == prune_files over its tail of IndexFile objects (scalar
+    _stats_exclude), across filter shapes (ranges, =, in, strings on
     non-indexed columns, unknown columns)."""
     qt, _li = _clone_fmt2(spark, tmp_table)
-    log = CommitLog(tmp_table)
-    kernel_snap = log.snapshot()
-    assert getattr(kernel_snap.files, "kernel", None) is not None
-    object_snap = log.snapshot()
-    object_snap.files = dict(
-        (p, f) for p, f in object_snap.files.items())  # materialize
+    kernel_snap, object_snap = _seeded_and_replayed(tmp_table)
     rng = random.Random(7)
     cases = [
         [("l_orderkey", ">=", 100), ("l_orderkey", "<", 900)],
@@ -155,58 +159,72 @@ def test_kernel_prune_equals_object_path(spark, tmp_table):
 
 
 def test_kernel_sample_files_equal(spark, tmp_table):
+    """sample_files over the base block-weight arrays == over the tail's
+    arrays, at every fraction."""
     qt, _li = _clone_fmt2(spark, tmp_table)
-    snap = qt.snapshot(refresh=True)
-    assert getattr(snap.files, "kernel", None) is not None
+    seeded, replayed = _seeded_and_replayed(tmp_table)
     for f in (0.01, 0.1, 0.5, 1.0):
-        kern = set(qt.sample_files(f, snap=snap))
-        # object path: same snapshot, materialized
-        mat = CommitLog(tmp_table).snapshot()
-        mat.files = {p: x for p, x in mat.files.items()}
-        obj = set(qt.sample_files(f, snap=mat))
-        assert kern == obj
+        base = set(qt.sample_files(f, snap=seeded))
+        tail = set(qt.sample_files(f, snap=replayed))
+        assert base == tail
 
 
-def test_lazy_files_contract(spark, tmp_table):
-    """Single-key ops, membership, len, and key iteration never
-    materialize; values()/items() do — and every op stays correct in
-    both regimes."""
+def test_kernel_mapping_contract(spark, tmp_table):
+    """The kernel IS the snapshot's path -> IndexFile mapping: single-
+    key ops, membership, len, key iteration and mutation stay correct
+    on both halves; single-key ops build only the files they touch, and
+    values()/items() build each base file once, through the same cache
+    (the kernel is never dropped)."""
     qt, _li = _clone_fmt2(spark, tmp_table)
+    # one post-checkpoint append so the snapshot has base AND tail files
+    qss.write(_li.limit(50), tmp_table,
+              columns_to_index=["l_orderkey", "l_extendedprice"],
+              cube_size=500)
     snap = CommitLog(tmp_table).snapshot()
-    lf = snap.files
-    assert isinstance(lf, LazyFiles)
-    n = len(lf)
-    keys = list(lf.keys())
-    assert len(keys) == n and len(set(keys)) == n
-    k0 = keys[0]
-    assert k0 in lf
-    f0 = lf[k0]
-    assert f0.path == k0 and f0.rows > 0
-    assert lf.get("nope") is None and "nope" not in lf
+    k = snap.files
+    assert isinstance(k, FileKernel) and len(k.paths) and k.tail
+    n = len(k)
+    keys = list(k.keys())
+    assert keys == list(k) and len(keys) == n and len(set(keys)) == n
+    assert bool(k) and not FileKernel.empty()
+    assert keys[-len(k.tail):] == list(k.tail), "base order, then tail"
+    for key in (keys[0], keys[-1]):            # a base and a tail file
+        assert key in k
+        f = k[key]
+        assert f.path == key and f.rows > 0 and k.get(key) is f
+    assert k.get("nope") is None and "nope" not in k
+    assert k.get("nope", 7) == 7 and k.pop("nope", None) is None
     with pytest.raises(KeyError):
-        lf["nope"]
-    # kernel-side mutation: overwrite + delete without materializing
-    popped = lf.pop(k0)
-    assert popped.path == k0 and k0 not in lf and len(lf) == n - 1
-    lf[k0] = popped
-    assert k0 in lf and len(lf) == n
-    assert lf.kernel is not None, "still columnar after key ops"
-    # whole-collection read materializes, identically
-    items = dict(lf.items())
-    assert lf.kernel is None
-    assert len(items) == n and items[k0].to_json() == popped.to_json()
+        k["nope"]
+    with pytest.raises(KeyError):
+        k.pop("nope")
+    assert not k.discard("nope")
+    assert set(k._singles) == {keys[0]}, "only the touched base file"
+    # mutation on both halves: pop + re-set, discard
+    for key in (keys[0], keys[-1]):
+        popped = k.pop(key)
+        assert popped.path == key and key not in k and len(k) == n - 1
+        k[key] = popped
+        assert key in k and len(k) == n and k[key] is popped
+    assert k.discard(keys[1]) and keys[1] not in k and len(k) == n - 1
+    # whole-collection reads: every live file once, built once
+    vals = k.values()
+    assert [f.path for f in vals] == list(k) and len(vals) == n - 1
+    assert all(a is b for a, b in zip(vals, k.values()))
+    assert [p for p, _ in k.items()] == list(k)
+    assert all(f is k.get(p) for p, f in k.items())
+    assert len(k.paths), "the base arrays stay in place"
 
 
 def test_format2_dml_and_optimize_roundtrip(spark, tmp_table):
-    """Write paths (DELETE, optimize) work on kernel-backed snapshots —
-    they materialize where needed and the next checkpoint round-trips
-    through the columnar writer."""
+    """Write paths (DELETE, optimize) work on checkpoint-seeded
+    snapshots — they build base IndexFiles where needed and the next
+    checkpoint round-trips through the columnar writer."""
     qt, _li = _clone_fmt2(spark, tmp_table)
     before = qt.to_df().count()
     out = qt.delete([("l_orderkey", "<", 100)])
     assert qt.to_df().count() == before - out["rows_deleted"]
     qt.optimize()
-    snap = qt.snapshot(refresh=True)
     assert qt.to_df().count() == before - out["rows_deleted"]
     # keep appending to force the NEXT checkpoint from a mutated kernel
     li = load(spark, "lineitem").limit(100)
@@ -227,21 +245,85 @@ def test_format2_dml_and_optimize_roundtrip(spark, tmp_table):
     assert a == b
 
 
-def test_auto_threshold_keeps_small_tables_json(spark, tmp_table):
-    """Default (auto) format: small tables keep the single-JSON
-    checkpoint — no parquet artifacts appear."""
-    li = load(spark, "lineitem").limit(500)
-    qss.write(li, tmp_table, columns_to_index=["l_orderkey"],
-              cube_size=200)
-    for _ in range(11):
-        qss.write(li.limit(50), tmp_table,
-                  columns_to_index=["l_orderkey"], cube_size=200)
+def test_format1_checkpoint_reads_and_upgrades(spark, tmp_table):
+    """Tables checkpointed by older engines carry a single-JSON
+    (format-1) checkpoint. It still seeds snapshots — files, revisions,
+    weights, domains, txns and protocol equal a full replay — and the
+    next checkpoint written is format 2."""
+    from qbeast_spark_spark.sources.log import CHECKPOINT_INTERVAL
+
+    li = load(spark, "lineitem").limit(600)
+    cols = ["l_orderkey", "l_extendedprice"]
+    qss.write(li, tmp_table, columns_to_index=cols, cube_size=200)
+    qss.write(li.limit(80), tmp_table, columns_to_index=cols,
+              cube_size=200, txn_app_id="app", txn_version=3)
+    qt = qss.QbeastTable.for_path(spark, tmp_table)
+    qt.delete([("l_orderkey", "<", 40)], mode="dv")     # DVs + protocol
+    qt.append_staging(li.limit(30))
     log_dir = os.path.join(tmp_table, "_qbeast_log")
-    names = os.listdir(log_dir)
-    assert any(p.endswith(".checkpoint.json") for p in names)
-    assert not any(p.endswith(".checkpoint.meta.json") for p in names)
+    log = CommitLog(tmp_table)
+    full = log.snapshot()
+    assert full.txns == {"app": 3} and full.protocol
+    v = full.version
+    assert 0 < v < CHECKPOINT_INTERVAL
+    assert any(f.dv for f in full.files.values())
+    # hand-written format-1 checkpoint at v, in the old writer's shape
+    state = {
+        "version": v,
+        "revisions": {str(r): rev.to_json()
+                      for r, rev in full.revisions.items()},
+        "schema": full.schema_json,
+        "properties": full.properties,
+        "txns": full.txns,
+        "protocol": full.protocol,
+        "files": [f.to_json() for f in full.files.values()],
+        "cubeWeights": {str(r): w for r, w in full.cube_weights.items()},
+        "cubeDomains": {str(r): d for r, d in full.cube_domains.items()},
+    }
+    with open(os.path.join(log_dir, f"{v:012d}.checkpoint.json"),
+              "w") as fh:
+        json.dump(state, fh, sort_keys=True)
+    with open(os.path.join(log_dir, "_last_checkpoint"), "w") as fh:
+        json.dump({"version": v, "format": 1}, fh)
+    # hide the commits the checkpoint covers: the seed alone must carry
+    # the state
+    hidden = os.path.join(str(tmp_table), "hidden")
+    os.makedirs(hidden)
+    for i in range(v + 1):
+        os.replace(os.path.join(log_dir, f"{i:012d}.json"),
+                   os.path.join(hidden, f"{i:012d}.json"))
+    assert log._last_checkpoint_info() == (v, 1)
+    seeded = log.snapshot()
+    assert seeded.version == v
+    assert {p: f.to_json() for p, f in seeded.files.items()} \
+        == {p: f.to_json() for p, f in full.files.items()}
+    assert {r: x.to_json() for r, x in seeded.revisions.items()} \
+        == {r: x.to_json() for r, x in full.revisions.items()}
+    assert seeded.cube_weights == full.cube_weights
+    assert seeded.cube_domains == full.cube_domains
+    assert seeded.txns == full.txns
+    assert seeded.protocol == full.protocol
+    assert seeded.schema_json == full.schema_json
+    assert seeded.properties == full.properties
+    for name in os.listdir(hidden):
+        os.replace(os.path.join(hidden, name), os.path.join(log_dir, name))
+    # metadata-only commits up to the next checkpoint version
+    while log.snapshot().version < CHECKPOINT_INTERVAL:
+        qt.set_properties({"note": str(log.snapshot().version)})
     with open(os.path.join(log_dir, "_last_checkpoint")) as fh:
-        assert json.load(fh)["format"] == 1
+        assert json.load(fh) == {"version": CHECKPOINT_INTERVAL,
+                                 "format": 2}
+    ck = f"{CHECKPOINT_INTERVAL:012d}.checkpoint"
+    names = os.listdir(log_dir)
+    assert {ck + ".meta.json", ck + ".parquet",
+            ck + ".state.parquet"} <= set(names)
+    assert ck + ".json" not in names
+    upgraded = log.snapshot()
+    assert len(upgraded.files.paths) == len(full.files)
+    assert {p: f.to_json() for p, f in upgraded.files.items()} \
+        == {p: f.to_json() for p, f in full.files.items()}
+    assert qt.to_df().count() == \
+        sum(f.live_rows for f in full.files.values())
 
 
 def test_vacuum_ages_out_superseded_checkpoints(spark, tmp_table):
@@ -282,7 +364,6 @@ def test_format2_concurrent_appends_consistent(spark, tmp_table):
               columns_to_index=["l_orderkey", "l_extendedprice"],
               cube_size=500)
     qt = qss.QbeastTable.for_path(spark, tmp_table)
-    qt.set_properties({"qbeast.checkpoint.format": "parquet"})
     chunk = li.limit(100)
     errs = []
 
@@ -323,8 +404,7 @@ def test_kernel_nan_and_half_null_stats_never_prune(spark, tmp_path):
     from qbeast_spark_spark.core.revision import ColumnToIndex, Revision
     from qbeast_spark_spark.core.transform import LinearTransformation
     from qbeast_spark_spark.sources.log import Block, IndexFile, Snapshot
-    from qbeast_spark_spark.sources.metadata import (FileKernel, LazyFiles,
-                                                     _files_arrow_table)
+    from qbeast_spark_spark.sources.metadata import _files_arrow_table
     import pyarrow.parquet as pq
 
     files = {
@@ -345,7 +425,7 @@ def test_kernel_nan_and_half_null_stats_never_prune(spark, tmp_path):
     kind_y, _m, _x, present_y = k.stats["y"]
     assert not present_y[1], "half-null pair must be absent"
     snap = Snapshot(str(tmp_path))
-    snap.files = LazyFiles(k)
+    snap.files = k
     snap.revisions = {1: Revision(1, 0, 100, [ColumnToIndex("z", "")],
                                   [LinearTransformation(0.0, 1.0)],
                                   ["double"])}
@@ -374,9 +454,9 @@ def test_format2_partial_sync_falls_back_to_replay(spark, tmp_table):
     log = CommitLog(tmp_table)
     assert log._last_checkpoint_version() is None
     snap = log.snapshot()          # full replay, no crash
-    assert getattr(snap.files, "kernel", None) is None
+    assert len(snap.files.paths) == 0
     assert len(snap.files) > 0
-    assert qt.to_df().count() == 3000 + 200 * 9
+    assert qt.to_df().count() == 3000 + 200 * 10
 
 
 def test_replay_discard_never_materializes(spark, tmp_table):
@@ -384,9 +464,8 @@ def test_replay_discard_never_materializes(spark, tmp_table):
     tombstone bits — it must not build (then discard) IndexFiles."""
     qt, _li = _clone_fmt2(spark, tmp_table)
     qt.delete([("l_orderkey", "<", 1500)])       # a remove-heavy commit
-    snap = CommitLog(tmp_table).snapshot()
-    k = getattr(snap.files, "kernel", None)
-    assert k is not None, "kernel must survive replaying removes"
+    k = CommitLog(tmp_table).snapshot().files
+    assert len(k.paths) > 0, "expected a checkpoint-seeded base"
     assert not k._singles, "replay materialized removed files"
 
 
@@ -455,49 +534,48 @@ def test_lazy_cube_state_overlay_semantics(tmp_path):
 
 def test_maintenance_tallies_kernel_equals_object_walk(spark, tmp_table):
     """auto_maintain's policy thresholds (maintenance.py) read off the
-    kernel arrays on format-2 snapshots; the tallies must equal the
-    object walk a JSON snapshot would do, including staging files and
-    the post-checkpoint tail."""
+    kernel: the tallies over a checkpoint-seeded snapshot (base arrays
+    + post-checkpoint tail) and over a full replay (tail only) must both
+    equal an object walk of the files, including staging files."""
     from qbeast_spark_spark.core.revision import STAGING_REVISION_ID
-    from qbeast_spark_spark.sources import maintenance as mnt
 
+    S = STAGING_REVISION_ID
     qt, li = _clone_fmt2(spark, tmp_table)
-    # staging lane + one extra indexed append so the snapshot has a
-    # non-empty post-checkpoint tail on top of the parquet base
+    # staging lane + one extra indexed append so the seeded snapshot has
+    # a non-empty post-checkpoint tail on top of the parquet base
     qt.append_staging(li.limit(120))
     qss.write(li.limit(80), tmp_table,
               columns_to_index=["l_orderkey", "l_extendedprice"],
               cube_size=500)
 
-    log = CommitLog(tmp_table)
-    ksnap = log.snapshot()
-    k = getattr(ksnap.files, "kernel", None)
-    assert k is not None, "snapshot not kernel-backed"
-
-    osnap = log.snapshot()
-    list(osnap.files.values())          # force the object walk
-    assert getattr(osnap.files, "kernel", None) is None
-
-    for small in (0, 10_000, 1 << 40):
-        assert mnt._small_file_count(ksnap, small) == \
-            mnt._small_file_count(osnap, small)
-    assert mnt._staging_rows(ksnap) == mnt._staging_rows(osnap) > 0
-    assert sorted(mnt._staging_paths(ksnap)) == \
-        sorted(mnt._staging_paths(osnap))
-    revs = mnt._live_revisions(ksnap)
-    assert revs == mnt._live_revisions(osnap)
-    assert STAGING_REVISION_ID not in revs
-    for keep in revs:
-        assert sorted(mnt._old_revision_paths(ksnap, keep)) == \
-            sorted(mnt._old_revision_paths(osnap, keep))
-    # tally reads must NOT have materialized the kernel snapshot
-    assert getattr(ksnap.files, "kernel", None) is not None
+    ksnap, rsnap = _seeded_and_replayed(tmp_table)
+    k = ksnap.files
+    assert k.tail, "no post-checkpoint tail"
+    files = rsnap.files.values()            # the object walk's input
+    revs = sorted({f.revision_id for f in files} - {S})
+    assert revs and S not in revs
+    for snap in (ksnap, rsnap):
+        kf = snap.files
+        for small in (0, 10_000, 1 << 40):
+            assert kf.small_file_count(small) == sum(
+                1 for f in files if f.size < small)
+        assert kf.staging_rows_sum(S) == sum(
+            f.live_rows for f in files if f.revision_id == S) > 0
+        assert sorted(kf.paths_in_revision(S)) == sorted(
+            f.path for f in files if f.revision_id == S)
+        assert kf.live_revision_ids(S) == revs
+        for keep in revs:
+            assert sorted(kf.paths_excluding_revisions((S, keep))) == \
+                sorted(f.path for f in files
+                       if f.revision_id not in (S, keep))
+    # tally reads must NOT have built base IndexFiles
+    assert not k._singles
 
 
 def test_auto_maintain_noop_keeps_kernel_columnar(spark, tmp_table):
     """A healthy table's auto_maintain pass is a pure threshold check —
-    on a format-2 snapshot it must not pay the materialize-all object
-    cost (the 100-TB streaming-sink policy path, VERDICT r9 #1)."""
+    on a checkpoint-seeded snapshot it must not build base IndexFile
+    objects (the 100-TB streaming-sink policy path, VERDICT r9 #1)."""
     from unittest.mock import patch
 
     from qbeast_spark_spark.sources.log import CommitLog as CL
@@ -506,17 +584,16 @@ def test_auto_maintain_noop_keeps_kernel_columnar(spark, tmp_table):
 
     _clone_fmt2(spark, tmp_table)
     report = {}
-    with patch.object(FK, "materialize",
+    with patch.object(FK, "_build",
                       side_effect=AssertionError(
-                          "auto_maintain materialized the file dict")):
+                          "auto_maintain built base IndexFiles")):
         report = auto_maintain(
             spark, tmp_table,
             max_staging_rows=1 << 40, max_revisions=1 << 20,
             max_small_files=1 << 30)
     assert report == {}
-    # and the snapshot the policy check used really was kernel-backed
-    assert getattr(CL(tmp_table).snapshot().files, "kernel", None) \
-        is not None
+    # and the snapshot the policy check used really had base arrays
+    assert len(CL(tmp_table).snapshot().files.paths) > 0
 
 
 def test_checkpoint_state_copy_forward_equals_eager(spark, tmp_table):
@@ -576,9 +653,9 @@ def test_checkpoint_write_keeps_lazy_state_and_reads_back(spark,
 
 
 def test_detail_kernel_equals_object_walk(spark, tmp_table):
-    """r10: DESCRIBE-DETAIL tallies off the kernel arrays == the object
-    walk, without materializing the snapshot (detail() is a dashboard
-    call a 10^6-file table answers from metadata)."""
+    """r10: DESCRIBE-DETAIL tallies off the kernel's base arrays == off
+    its tail == the object walk (detail() is a dashboard call a
+    10^6-file table answers from metadata)."""
     qt, li = _clone_fmt2(spark, tmp_table)
     qt.append_staging(li.limit(100))
     qt.delete([("l_orderkey", "<", 30)])        # some DVs or rewrites
@@ -588,15 +665,17 @@ def test_detail_kernel_equals_object_walk(spark, tmp_table):
 
     from qbeast_spark_spark.core.revision import STAGING_REVISION_ID
 
-    # detail() refreshes and must land on a kernel-backed snapshot
-    assert getattr(CommitLog(tmp_table).snapshot().files,
-                   "kernel", None) is not None
+    # detail() refreshes and must land on a checkpoint-seeded snapshot
+    assert len(CommitLog(tmp_table).snapshot().files.paths) > 0
     d_kernel = qt.detail()
 
-    # truth: the object walk over a materialized twin of the snapshot
-    osnap = CommitLog(tmp_table).snapshot()
-    files = list(osnap.files.values())
+    # truth: the object walk over the files, plus the same tallies off
+    # a full replay (every file in the kernel's tail)
     small = 32 * 1024 * 1024
+    seeded, replayed = _seeded_and_replayed(tmp_table)
+    files = replayed.files.values()
+    assert replayed.files.detail_tallies(STAGING_REVISION_ID, small) \
+        == seeded.files.detail_tallies(STAGING_REVISION_ID, small)
     assert d_kernel["numFiles"] == len(files)
     assert d_kernel["numRows"] == sum(f.live_rows for f in files)
     assert d_kernel["sizeInBytes"] == sum(f.size for f in files)
@@ -621,9 +700,10 @@ def test_vacuum_dv_liveness_on_kernel_snapshot(spark, tmp_table):
     out = qt.delete([("l_orderkey", "<", 80)], mode="dv")
     assert out["rows_deleted"] > 0
     snap = CommitLog(tmp_table).snapshot()
-    assert getattr(snap.files, "kernel", None) is not None
-    assert snap.files.kernel.live_dvs() or any(
-        f.dv for f in snap.files.values())
+    assert len(snap.files.paths) > 0
+    assert snap.files.live_dvs()
+    assert sorted(map(json.dumps, snap.files.live_dvs())) == sorted(
+        json.dumps(f.dv) for f in snap.files.values() if f.dv)
     dv_files = [n for n in os.listdir(tmp_table)
                 if n.startswith("deletion_vector_")]
     assert dv_files

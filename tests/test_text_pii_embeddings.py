@@ -582,11 +582,9 @@ def test_quantized_topk_ties_across_batches_break_by_id(spark):
 def test_quantized_topk_zero_norm_ranks_last_both_lanes(spark):
     """ADVICE r11: a zero vector's cosine must be NULL from the kernel
     (ranked last), not 0/0 = NaN (NaN sorts ABOVE every double,
-    fabricating a spurious top-1). Under non-ANSI Divide semantics the
+    fabricating a spurious top-1). Under non-ANSI settings the
     expression lane yields the same NULLs — lanes must agree row for
-    row; under Spark 4's default ANSI mode the expression lane raises
-    DIVIDE_BY_ZERO outright, so the kernel's NULL is the graceful
-    superset behavior."""
+    row (the ANSI case is pinned by the next test)."""
     from pyspark.sql import Window
 
     from qbeast_spark_spark.operators.embeddings import (
@@ -620,6 +618,29 @@ def test_quantized_topk_zero_norm_ranks_last_both_lanes(spark):
         else:
             spark.conf.set("spark.sql.ansi.enabled", prev)
     assert sorted(map(tuple, new2)) == sorted(map(tuple, old))
+
+
+def test_quantized_topk_zero_norm_fallback_lane_matches_kernel(
+        spark, monkeypatch):
+    """The expression lane (taken above DRIVER_MAX_QUERY_ROWS) must
+    agree with the kernel lane on zero-norm vectors and queries under
+    the session's default (ANSI) settings: NULL cosines ranked last,
+    not a DIVIDE_BY_ZERO error."""
+    import qbeast_spark_spark.operators.embeddings as E
+
+    rows = [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [0.8, 0.6]),
+            (4, [0.0, 0.0]), (5, [0.0, 1.0])]
+    vecs = spark.createDataFrame(rows,
+                                 "vec_id long, embedding array<double>")
+    q = spark.createDataFrame([(0, [1.0, 0.0]), (9, [0.0, 0.0])],
+                              "q_id long, q_embedding array<double>")
+    kernel = E.quantized_topk(vecs, q, k=4).collect()
+    monkeypatch.setattr(E, "DRIVER_MAX_QUERY_ROWS", 0)
+    fallback = E.quantized_topk(vecs, q, k=4)
+    assert "MapInArrow" not in fallback._jdf.queryExecution().toString()
+    got = fallback.collect()
+    assert any(r["cos"] is None for r in got)
+    assert sorted(map(tuple, got)) == sorted(map(tuple, kernel))
 
 
 def test_quantized_topk_oversized_query_side_falls_back(spark, emb,

@@ -113,29 +113,29 @@ def test_viz_svg_truncation_cap(spark, tmp_table, monkeypatch):
 
 
 def test_viz_kernel_path_equals_object_walk(spark, tmp_table):
-    """r10 review: on a format-2 snapshot cube_tree walks the
-    FileKernel arrays — identical output to the object walk, and the
-    cached snapshot keeps its kernel (no LazyFiles materialization)."""
+    """r10 review: cube_tree walks the FileKernel base arrays of a
+    checkpoint-seeded snapshot — identical output to the walk over the
+    tail's IndexFile objects of a full replay, and no base IndexFile is
+    built."""
+    import os
+
     from qbeast_spark_spark.sources.log import CommitLog
 
     li = load(spark, "lineitem")
     qss.write(li.limit(3000), tmp_table,
               columns_to_index=["l_orderkey", "l_extendedprice"],
               cube_size=400)
-    qt = qss.QbeastTable.for_path(spark, tmp_table)
-    qt.set_properties({"qbeast.checkpoint.format": "parquet"})
-    for _ in range(10):
+    for _ in range(11):     # checkpoint at v10 + a post-checkpoint tail
         qss.write(li.limit(200), tmp_table,
                   columns_to_index=["l_orderkey", "l_extendedprice"],
                   cube_size=400)
-    log = CommitLog(tmp_table)
-    ksnap = log.snapshot()
-    assert getattr(ksnap.files, "kernel", None) is not None
+    ksnap = CommitLog(tmp_table).snapshot()
+    assert len(ksnap.files.paths) > 0 and ksnap.files.tail
     a = viz.cube_tree(ksnap, fraction=0.03)
-    assert getattr(ksnap.files, "kernel", None) is not None, \
-        "viz must not materialize the kernel snapshot"
-    osnap = log.snapshot()
-    list(osnap.files.values())
-    assert getattr(osnap.files, "kernel", None) is None
+    assert not ksnap.files._singles, \
+        "viz must not build base IndexFiles"
+    os.remove(os.path.join(tmp_table, "_qbeast_log", "_last_checkpoint"))
+    osnap = CommitLog(tmp_table).snapshot()
+    assert len(osnap.files.paths) == 0
     b = viz.cube_tree(osnap, fraction=0.03)
     assert a == b

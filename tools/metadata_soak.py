@@ -74,7 +74,7 @@ def _cube_region(depth: int, path: int, dims: int = 2):
     return frm, [f + side for f in frm]
 
 
-def generate(table: str, n_files: int, fmt: str = "json") -> None:
+def generate(table: str, n_files: int) -> None:
     """Fabricate a commit log with ``n_files`` live files under
     ``table``/_qbeast_log, shaped like a real ingest history."""
     from qbeast_spark_spark.core.revision import ColumnToIndex, Revision
@@ -140,8 +140,7 @@ def generate(table: str, n_files: int, fmt: str = "json") -> None:
             "cubeWeights": {"1": weights} if weights else {},
             "cubeDomains": {"1": domains} if domains else {},
             "schema": schema if v == 0 else None,
-            "properties": ({"qbeast.checkpoint.format": fmt}
-                           if v == 0 else {}),
+            "properties": {},
             "txn": None, "cdc": None, "protocol": None,
         }
         with open(os.path.join(log_dir, f"{v:012d}.json"), "w") as fh:
@@ -154,7 +153,6 @@ def generate(table: str, n_files: int, fmt: str = "json") -> None:
         if v == 0:
             snap.revisions[1] = rev
             snap.schema_json = schema
-            snap.properties["qbeast.checkpoint.format"] = fmt
         dstw = snap.cube_weights.setdefault(1, {})
         for c, w in weights.items():
             dstw[c] = min(dstw.get(c, w), w)
@@ -166,15 +164,14 @@ def generate(table: str, n_files: int, fmt: str = "json") -> None:
             CommitLog(table)._write_checkpoint(snap)
 
 
-def measure_one(n_files: int, keep: str = None,
-                fmt: str = "json") -> dict:
+def measure_one(n_files: int, keep: str = None) -> dict:
     from qbeast_spark_spark.sources.log import CommitLog
     from qbeast_spark_spark.sources.reader import prune_files
 
     table = keep or tempfile.mkdtemp(prefix=f"qmeta_{n_files}_")
-    out = {"files": n_files, "format": fmt}
+    out = {"files": n_files}
     t0 = time.perf_counter()
-    generate(table, n_files, fmt=fmt)
+    generate(table, n_files)
     out["gen_s"] = round(time.perf_counter() - t0, 3)
     out["log_mb"] = round(sum(
         os.path.getsize(os.path.join(table, "_qbeast_log", p))
@@ -201,18 +198,17 @@ def measure_one(n_files: int, keep: str = None,
     out["prune_keepall_s"] = round(time.perf_counter() - t0, 3)
     out["prune_keepall_kept"] = len(kept_all)
 
-    # auto_maintain's policy threshold check (maintenance.py): on a
-    # kernel-backed snapshot this must be O(arrays), never the
-    # materialize-all object cost — the streaming sink pays it every
-    # maintain_every batches (VERDICT r9 Next #1).
-    from qbeast_spark_spark.sources import maintenance as mnt
+    # auto_maintain's policy threshold check (maintenance.py): this must
+    # be O(arrays), never building the base IndexFile objects — the
+    # streaming sink pays it every maintain_every batches (VERDICT r9
+    # Next #1).
+    from qbeast_spark_spark.core.revision import STAGING_REVISION_ID
     t0 = time.perf_counter()
-    mnt._staging_rows(snap)
-    mnt._live_revisions(snap)
-    mnt._small_file_count(snap, 32 * 2**20)
+    snap.files.staging_rows_sum(STAGING_REVISION_ID)
+    snap.files.live_revision_ids(STAGING_REVISION_ID)
+    snap.files.small_file_count(32 * 2**20)
     out["maintain_tallies_s"] = round(time.perf_counter() - t0, 3)
-    out["maintain_kept_kernel"] = \
-        getattr(snap.files, "kernel", None) is not None
+    out["maintain_objects_built"] = len(snap.files._singles)
 
     t0 = time.perf_counter()
     log._write_checkpoint(snap)
@@ -221,9 +217,9 @@ def measure_one(n_files: int, keep: str = None,
     log._seed_from_checkpoint(snap.version)
     out["checkpoint_seed_s"] = round(time.perf_counter() - t0, 3)
 
-    # DML planning proxies: full-key list + live-row sum. On a
-    # kernel-backed snapshot values() MATERIALIZES every IndexFile —
-    # the deferred object cost a whole-table write path would pay.
+    # DML planning proxies: full-key list + live-row sum. values() builds
+    # every base IndexFile — the deferred object cost a whole-table
+    # write path would pay.
     t0 = time.perf_counter()
     _ = list(snap.files.keys())
     out["keys_s"] = round(time.perf_counter() - t0, 3)
@@ -243,25 +239,21 @@ def main():
     ap.add_argument("--keep", help="keep the generated table at this path")
     ap.add_argument("--md", action="store_true",
                     help="print a SCALE.md-ready table")
-    ap.add_argument("--format", default="json",
-                    choices=["json", "parquet", "auto"])
     args = ap.parse_args()
     if args.one:
-        print(json.dumps(measure_one(args.one, keep=args.keep,
-                                     fmt=args.format)))
+        print(json.dumps(measure_one(args.one, keep=args.keep)))
         return
     rows = []
     for n in [int(s) for s in args.sizes.split(",")]:
         p = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--one", str(n),
-             "--format", args.format]
+            [sys.executable, os.path.abspath(__file__), "--one", str(n)]
             + (["--keep", args.keep + f"_{n}"] if args.keep else []),
             capture_output=True, text=True, check=True)
         row = json.loads(p.stdout.strip().splitlines()[-1])
         rows.append(row)
         print(json.dumps(row), flush=True)
     if args.md and rows:
-        cols = ["files", "format", "live_files", "log_mb", "snapshot_s",
+        cols = ["files", "live_files", "log_mb", "snapshot_s",
                 "rss_delta_mb", "prune_selective_s",
                 "prune_selective_kept", "prune_keepall_s",
                 "checkpoint_write_s", "checkpoint_seed_s",
