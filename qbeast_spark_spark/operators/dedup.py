@@ -350,8 +350,8 @@ def simhash_pairs(docs, max_hamming: int = 3, n_bands: int = 4,
 # the iterative join rounds are pure fixed overhead (4+ jobs per round),
 # above it position sets stay distributed. 1M directed edges = 500k
 # pairs ~ tens of MB on the driver — the same bounded-collect idiom as
-# sources/dml._SMALL_DV_MAX_POSITIONS (256k) and the broadcast query
-# matrices. Tune via the function arg; 0 disables the fast path.
+# the broadcast query matrices. Tune via the function arg; 0 disables
+# the fast path.
 DRIVER_CC_MAX_EDGES = 1_000_000
 
 

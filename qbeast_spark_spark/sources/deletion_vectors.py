@@ -34,6 +34,9 @@ Format layers (all little-endian unless noted, per the spec):
   descriptor's ``offset`` points at the size prefix and ``sizeInBytes``
   is dataSize (framing excluded).
 
+Reads apply the vectors inside the scan, like delta-spark's reader:
+see ``with_dv_filter``.
+
 The reference engine inherits DVs from delta-spark when users run Delta
 DML against its tables (docs/Quickstart.md:409-427 tells them the index
 is lost afterwards); reading them here keeps such tables importable.
@@ -42,10 +45,13 @@ is lost afterwards); reading them here keeps such tables importable.
 from __future__ import annotations
 
 import os
+import string
 import struct
+import unicodedata
 import uuid as _uuid
 import zlib
 from typing import Dict, List, Optional, Sequence, Tuple
+from urllib.parse import quote
 
 import numpy as np
 
@@ -323,12 +329,27 @@ def descriptor_positions(table_path: str, desc: DVDescriptor) -> np.ndarray:
 
 # -- Spark-side filtering -------------------------------------------------
 
-def _file_uri(abs_path: str) -> str:
-    """The string ``_metadata.file_path`` produces for a local file
-    (Hadoop Path URI: scheme + path, no authority)."""
-    from urllib.parse import quote
+# ASCII characters java.net.URI leaves as they are in a path component:
+# RFC 2396 unreserved + punct + "/" + "@"
+_URI_PATH_SAFE = frozenset(string.ascii_letters + string.digits +
+                           "_-!.~'()*,;:$&+=/@")
 
-    return "file:" + quote(os.path.abspath(abs_path))
+
+def _file_uri(abs_path: str) -> str:
+    """The string ``_metadata.file_path`` produces for a local file: Hadoop
+    ``Path.toUri()``, i.e. ``file:`` + the absolute path quoted the way
+    ``java.net.URI``'s multi-argument constructors quote it. ASCII outside
+    the safe set and non-ASCII space/control characters are
+    percent-encoded (UTF-8); every other non-ASCII character, and
+    ``= , + @``, stays as it is."""
+    out = []
+    for ch in os.path.abspath(abs_path):
+        if ch in _URI_PATH_SAFE or (ch > "\x7f" and unicodedata.category(ch)
+                                    not in ("Cc", "Zs", "Zl", "Zp")):
+            out.append(ch)
+        else:
+            out.append(quote(ch, safe=""))
+    return "file:" + "".join(out)
 
 
 def _ensure_shipped() -> None:
@@ -398,123 +419,92 @@ def positions_df(spark, entries: List[Tuple[str, DVDescriptor]],
     return desc_df.repartition(n).mapInPandas(_expand, out_schema)
 
 
-# with_dv_filter small-snapshot fast path: while the TOTAL deleted
-# positions fit under this bound (known from descriptor cardinalities,
-# no decode needed), the masks are decoded on the DRIVER and shipped as
-# an explicitly-broadcast join side — same anti-join as the large path,
-# minus its per-execution Python decode stage (worker spinup +
-# exchange), which every DML verb re-paid. A/B on the real qb_dml flow:
-# 7.7 s vs 10.9 s. (A literal-map array_contains filter was tried first
-# and measured 2x SLOWER inside MERGE/matview plans — it costs
-# O(per-file cardinality) per row.) Above the bound the distributed
-# anti-join keeps billions of positions off the driver (the 100 TB
-# path). Bound rationale (r8 second session): 256k positions decode in
-# <100 ms and the worst-case frame — each row repeating a full file
-# URI string, ~120-200 bytes/row — is 30-60 MB, still comfortably
-# driver-safe on any real driver; the r8 merge-on-read verbs
-# routinely leave 50k+ masked positions between optimize() runs, and
-# the old 16k cap silently demoted every post-UPDATE read to the slow
-# lane (measured: the whole qb_dml A/B gap above). The decoded
-# broadcast frame is CACHED per exact descriptor set (below), so the
-# several _df_for_files calls one DML verb or matview refresh issues
-# pay the driver decode once, not per plan.
-_SMALL_DV_MAX_POSITIONS = 262_144
-
-# (session id, table path, frozen descriptor set) -> (broadcast-ready
-# position DataFrame, decoded position count, weakref to the session).
-# Tiny bounded LRU: entries die as soon as any DV changes (the
-# descriptor uuids change), so staleness is impossible — the key IS the
-# content identity. Bounded by TOTAL decoded positions (not entry
-# count): eight worst-case 262k-position frames would otherwise pin
-# ~0.5 GB of driver-side local relations for the process lifetime.
-# Entries whose SparkSession has stopped are evicted on the next call
-# (the cached DataFrame would otherwise keep the dead session alive).
-_SMALL_DV_CACHE: "OrderedDict" = None  # type: ignore[assignment]
-_SMALL_DV_CACHE_MAX_ENTRIES = 32
-_SMALL_DV_CACHE_MAX_TOTAL_POSITIONS = 1_048_576
+# with_dv_filter lane gate: total bytes of the scanned DV'd files' dense
+# bitsets, (max masked row index) / 8 each. 1 MiB spans 8.4M row indexes
+# (more than one default 5M-row cube file) and keeps the literal's copies
+# in the plan description and in each task's closure small.
+_SMALL_DV_MAX_BITMAP_BYTES = 1 << 20
 
 
-def _session_stopped(sess) -> bool:
-    """True when the session's SparkContext is gone or stopped."""
-    try:
-        sc = getattr(sess, "_sc", None) or sess.sparkContext
-        return sc is None or getattr(sc, "_jsc", None) is None
-    except Exception:
-        return True
-
-
-def _small_dv_frame(spark, entries, table_path: str):
-    """Driver-decoded (file_path, row_index) frame for a small
-    descriptor set, cached per exact content identity."""
-    import pandas as pd
-    import weakref
-    from collections import OrderedDict
-    from pyspark.sql import functions as F
-
-    global _SMALL_DV_CACHE
-    if _SMALL_DV_CACHE is None:
-        _SMALL_DV_CACHE = OrderedDict()
-    # evict dead entries first: their session is stopped (or collected),
-    # so the cached frame is unusable and only pins JVM-side memory
-    for k in [k for k, (_pos, _n, wr) in _SMALL_DV_CACHE.items()
-              if (s := wr()) is None or _session_stopped(s)]:
-        del _SMALL_DV_CACHE[k]
-    key = (id(spark), os.path.abspath(table_path), tuple(sorted(
-        (abs_file, d.path_or_inline, d.offset, d.size_in_bytes)
-        for abs_file, d in entries)))
-    hit = _SMALL_DV_CACHE.get(key)
-    if hit is not None:
-        _SMALL_DV_CACHE.move_to_end(key)
-        return hit[0]
-    frames = []
+def _small_lane_bitsets(entries: List[Tuple[str, DVDescriptor]],
+                        table_path: str) -> Optional[Dict[str, np.ndarray]]:
+    """{file URI: dense bitset} of the files that mask any row, or None
+    over the gate. Row ``r`` is bit ``r & 63`` of int64 word ``r >> 6``;
+    a bitset holds at least its cardinality in bits."""
+    budget = _SMALL_DV_MAX_BITMAP_BYTES
+    if sum(d.cardinality for _, d in entries) > 8 * budget:
+        return None
+    out = {}
     for abs_file, desc in entries:
-        p = descriptor_positions(table_path, desc)
-        frames.append(pd.DataFrame({
-            "file_path": np.repeat(_file_uri(abs_file), len(p)),
-            "row_index": p.astype("int64")}))
-    # explicit schema: an all-empty position set (cardinality-0
-    # descriptors on an imported table) must not crash inference
-    pdf = pd.concat(frames, ignore_index=True) if frames else \
-        pd.DataFrame({"file_path": pd.Series(dtype="str"),
-                      "row_index": pd.Series(dtype="int64")})
-    pos = F.broadcast(spark.createDataFrame(
-        pdf, schema="file_path string, row_index long"))
-    try:
-        wr = weakref.ref(spark)
-    except TypeError:       # session type not weakref-able: no caching
-        return pos
-    _SMALL_DV_CACHE[key] = (pos, len(pdf), wr)
-    while len(_SMALL_DV_CACHE) > 1 and (
-            len(_SMALL_DV_CACHE) > _SMALL_DV_CACHE_MAX_ENTRIES
-            or sum(n for (_p, n, _w) in _SMALL_DV_CACHE.values())
-            > _SMALL_DV_CACHE_MAX_TOTAL_POSITIONS):
-        _SMALL_DV_CACHE.popitem(last=False)
-    return pos
+        pos = descriptor_positions(table_path, desc)
+        if not len(pos):
+            continue
+        n_words = int(pos[-1]) // 64 + 1
+        budget -= 8 * n_words
+        if budget < 0:
+            return None
+        hits = np.zeros(64 * n_words, dtype=bool)
+        hits[pos] = True
+        out[_file_uri(abs_file)] = np.packbits(
+            hits, bitorder="little").view("<i8")
+    return out
+
+
+def _bitset_literal(spark, bitsets: List[np.ndarray]):
+    """``array<array<bigint>>`` literal, one bitset per file. py4j moves a
+    ``byte[]`` in one message but other arrays element by element, so
+    all words cross as bytes and are split per file on the JVM."""
+    from pyspark.sql.classic.column import Column
+
+    jvm = spark._jvm
+    gw = spark.sparkContext._gateway
+    flat = np.concatenate(bitsets)
+    jflat = gw.new_array(gw.jvm.long, len(flat))
+    (jvm.java.nio.ByteBuffer.wrap(bytearray(flat.tobytes()))
+     .order(jvm.java.nio.ByteOrder.LITTLE_ENDIAN).asLongBuffer().get(jflat))
+    per_file = gw.new_array(gw.jvm.long, len(bitsets), 0)
+    start = 0
+    for i, words in enumerate(bitsets):
+        per_file[i] = jflat[start:start + len(words)]
+        start += len(words)
+    return Column(jvm.org.apache.spark.sql.functions.lit(per_file))
 
 
 def with_dv_filter(df, spark, entries: List[Tuple[str, DVDescriptor]],
                    table_path: str):
-    """Anti-join ``df`` (a parquet scan) against its deleted positions.
+    """Drop the deleted rows of ``df``, a parquet scan whose files include
+    ``entries`` [(absolute data file path, descriptor)].
 
-    Scale shape: the scan gains two generated metadata columns (no
-    extra I/O); the anti-join keys on (file_path, row_index). Small
-    snapshots (<= _SMALL_DV_MAX_POSITIONS total, the common case —
-    optimize() purges DVs continuously) decode on the driver and
-    broadcast the position side; larger snapshots decode on executors
-    (positions_df). No O(rows) data ever moves through Python either
-    way."""
+    Small lane (bitsets within _SMALL_DV_MAX_BITMAP_BYTES, the common
+    case since optimize() purges DVs): one ``where`` on the scan. The
+    row's ``_metadata.file_path`` picks its file's bitset out of a plan
+    literal (one string comparison per DV'd file) and bit
+    ``_metadata.row_index`` decides. No join, no exchange, no extra job.
+    Large lane: anti-join on (file_path, row_index) against
+    ``positions_df``, decoded on executors."""
     from pyspark.sql import functions as F
 
     if not entries:
         return df
-    cols = df.columns
-    if sum(d.cardinality for _, d in entries) <= _SMALL_DV_MAX_POSITIONS:
-        pos = _small_dv_frame(spark, entries, table_path)
-    else:
+    bitsets = _small_lane_bitsets(entries, table_path)
+    if bitsets is None:
+        cols = df.columns
         pos = positions_df(spark, entries, table_path)
-    return (df.withColumn("__fp", F.col("_metadata.file_path"))
-              .withColumn("__ri", F.col("_metadata.row_index"))
-              .join(pos, on=[F.col("__fp") == pos.file_path,
-                             F.col("__ri") == pos.row_index],
-                    how="left_anti")
-              .select(*cols))
+        return (df.withColumn("__fp", F.col("_metadata.file_path"))
+                  .withColumn("__ri", F.col("_metadata.row_index"))
+                  .join(pos, on=[F.col("__fp") == pos.file_path,
+                                 F.col("__ri") == pos.row_index],
+                        how="left_anti")
+                  .select(*cols))
+    if not bitsets:
+        return df
+    # one string literal split at plan time: URIs never hold a newline
+    # (java.net.URI quotes control characters)
+    uris = F.split(F.lit("\n".join(bitsets)), "\n")
+    k = F.array_position(uris, F.col("_metadata.file_path"))  # 0: no DV
+    row = F.col("_metadata.row_index")
+    word = F.get(F.get(_bitset_literal(spark, list(bitsets.values())),
+                       (k - 1).cast("int")),
+                 F.shiftright(row, 6).cast("int"))
+    masked = F.getbit(word, row.bitwiseAND(63).cast("int"))
+    return df.where(F.coalesce(masked, F.lit(0)) == 0)

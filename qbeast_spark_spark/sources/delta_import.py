@@ -23,10 +23,10 @@ parquet columns don't carry physical names (e.g. raw Iceberg imports) —
 those raise instead of silently reading nulls.
 
 Deletion vectors are SUPPORTED: an add action's ``deletionVector``
-descriptor (storageType u/i/p) is decoded through
-sources/deletion_vectors.py — executor-side roaring-bitmap expansion,
-``_metadata.row_index`` anti-join on the scan — so tables that went
-through Delta DML with DVs enabled read their LOGICAL rows here.
+descriptor (storageType u/i/p) is applied to the scan by
+sources/deletion_vectors.py ``with_dv_filter`` (a row-index bitset test,
+or an anti-join above its size gate), so tables that went through Delta
+DML with DVs enabled read their LOGICAL rows here.
 """
 
 from __future__ import annotations

@@ -136,7 +136,7 @@ class QbeastTable:
         URI (``_metadata.file_path``) as a visible column CAPTURED AT THE
         SCAN — callers that need per-file attribution (DML match counts)
         must use this instead of ``input_file_name()``, which goes blank
-        if the deletion-vector anti-join below shuffles. ``pos_col``
+        after a shuffle (the large-lane DV anti-join below). ``pos_col``
         likewise captures ``_metadata.row_index`` — the DML verbs' fused
         match-count + DV-mask scan needs both (r12: one pass instead of
         a count pass plus a separate raw position scan)."""
@@ -166,8 +166,8 @@ class QbeastTable:
             df = df.withColumn(file_col, F.col("_metadata.file_path"))
         if pos_col:
             df = df.withColumn(pos_col, F.col("_metadata.row_index"))
-        # logical deletes: anti-join away DV'd positions (no-op plan change
-        # when no listed file carries a deletion vector — the common case)
+        # logical deletes: drop DV'd positions (no-op plan change when no
+        # listed file carries a deletion vector — the common case)
         dv_entries = []
         for rel in rel_paths:
             f = snap.files.get(rel)

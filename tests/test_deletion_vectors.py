@@ -263,38 +263,137 @@ def test_export_then_import_roundtrip_with_dvs(spark, dv_table, lineitem):
         lineitem.where("l_orderkey >= 300 and l_orderkey < 600").count()
 
 
-def test_small_dv_fast_path_equals_distributed(spark, tmp_path, monkeypatch):
-    """r8: small DV snapshots anti-join against a DRIVER-decoded,
-    explicitly-broadcast position side (no per-execution Python decode
-    stage). Both paths must return the exact same rows; the threshold
-    routes between them."""
-    import qbeast_spark_spark as qss
+def _commit_dvs(qt, masks):
+    """Re-add each file of ``masks`` {rel path: (storage type, row
+    positions)} carrying a deletion vector over those positions —
+    storage type "u" (sidecar) or "i" (inline) — in one commit."""
+    import dataclasses
+
+    from qbeast_spark_spark.sources.dml import _DV_PROTOCOL
+
+    snap = qt.snapshot(refresh=True)
+    add = []
+    for rel, (st, pos) in masks.items():
+        data = roaring_array_encode(pos)
+        if st == "i":
+            desc = DVDescriptor("i", z85_encode(_pad4(data)), None,
+                                len(data), len(set(pos)))
+        else:
+            uid = uuid.uuid4()
+            off, size = write_dv_file(
+                os.path.join(qt.path, f"deletion_vector_{uid}.bin"), data)
+            desc = DVDescriptor("u", z85_encode(uid.bytes), off, size,
+                                len(set(pos)))
+        add.append(dataclasses.replace(snap.files[rel], dv=desc.to_json()))
+    qt.log.commit(add=add, remove=[], schema_json=snap.schema_json,
+                  data_change=True, operation="DELETE",
+                  read_version=snap.version, read_files=list(masks),
+                  protocol=_DV_PROTOCOL)
+
+
+def _rows(df, cols):
+    return sorted(map(tuple, df.select(*cols).collect()))
+
+
+def test_small_dv_fast_path_equals_distributed(spark, tmp_path,
+                                              monkeypatch, lineitem):
+    """The two deletion-vector lanes — the scan's bitset filter and the
+    distributed anti-join, forced through the one gate constant — return
+    identical rows from to_df, a box read, sample and the DML fused
+    (file, position) scan, over adversarial masks: row 0 and the last
+    row, both sides of byte and word boundaries, a fully masked file, a
+    zero-cardinality and an inline descriptor, DV-free files in the same
+    scan, and more than 200 DV'd files; both equal a mask applied in
+    Python to the raw files."""
     from qbeast_spark_spark.sources import deletion_vectors as DVm
-    from conftest import load
 
-    li = load(spark, "lineitem")
     p = str(tmp_path / "t")
-    qss.write(li, p, columns_to_index=["l_orderkey", "l_extendedprice"],
-              cube_size=500)
+    for i in range(3):
+        qss.write(lineitem.withColumn("copy", F.lit(i)), p,
+                  columns_to_index=["l_orderkey", "l_extendedprice"],
+                  cube_size=20, mode="append")
     qt = qss.QbeastTable.for_path(spark, p)
+    files = sorted(qt.snapshot(refresh=True).files.values(),
+                   key=lambda f: f.path)
+    rows = {f.path: f.rows for f in files}
+    wide = [f.path for f in files if f.rows >= 66]
+    assert len(files) >= 215 and len(wide) >= 4
+    ends, bounds, full, inline = wide[:4]
+    masks = {ends: ("u", [0, rows[ends] - 1]),
+             bounds: ("u", [7, 8, 63, 64]),
+             full: ("u", list(range(rows[full]))),
+             inline: ("i", [1, rows[inline] - 2])}
+    rest = [f.path for f in files if f.path not in masks]
+    masks[rest[0]] = ("u", [])                 # zero cardinality
+    rng = np.random.default_rng(5)
+    for rel in rest[1:-10]:                    # the last 10 stay DV-free
+        masks[rel] = ("u", sorted(rng.choice(
+            rows[rel], size=int(rng.integers(1, rows[rel] + 1)),
+            replace=False)))
+    assert len(masks) >= 205
+    _commit_dvs(qt, masks)
+
+    cols = ["l_orderkey", "l_linenumber", "l_extendedprice", "copy"]
+    uri_of = {DVm._file_uri(os.path.join(p, rel)): rel for rel in rows}
+    raw = spark.read.parquet(*[os.path.join(p, f.path) for f in files])
+    raw = raw.select(*cols, F.col("_metadata.file_path").alias("fp"),
+                     F.col("_metadata.row_index").alias("ri")).collect()
+    dead = {(rel, int(r)) for rel, (_st, pos) in masks.items()
+            for r in pos}
+    live = [r for r in raw if (uri_of[r["fp"]], r["ri"]) not in dead]
+    assert len(live) == len(raw) - len(dead)
+    box = [("l_orderkey", ">=", 500), ("l_orderkey", "<", 3000)]
+
+    def lane_results():
+        t = qss.QbeastTable.for_path(spark, p)
+        rels = sorted(t.snapshot(refresh=True).files)
+        return {
+            "to_df": _rows(t.to_df(), cols),
+            "read": _rows(t.read(box), cols),
+            "sample": _rows(t.sample(0.3), cols),
+            "fused": _rows(t._df_for_files(rels, file_col="_f",
+                                           pos_col="_ri"), ["_f", "_ri"]),
+        }
+
+    small = lane_results()
+    monkeypatch.setattr(DVm, "_SMALL_DV_MAX_BITMAP_BYTES", 0)
+    large = lane_results()
+    assert small == large
+    assert small["to_df"] == sorted(tuple(r[c] for c in cols)
+                                    for r in live)
+    assert small["read"] == sorted(
+        tuple(r[c] for c in cols) for r in live
+        if 500 <= r["l_orderkey"] < 3000)
+    assert small["fused"] == sorted((r["fp"], r["ri"]) for r in live)
+    assert 0 < len(small["sample"]) < len(small["to_df"])
+
+
+def test_small_lane_filters_inside_the_scan(spark, dv_table):
+    """The small lane masks rows with a filter on the scan itself: a box
+    read of a DV'd table runs as many Spark jobs as the same read before
+    the delete, and its executed plan has no exchange-fed broadcast and
+    no join."""
+    qt = qss.QbeastTable.for_path(spark, dv_table)
+    box = [("l_orderkey", ">=", 100), ("l_orderkey", "<", 2000)]
+    sc = spark.sparkContext
+
+    def jobs_of(group):
+        df = qss.QbeastTable.for_path(spark, dv_table).read(box)
+        sc.setJobGroup(group, group)
+        try:
+            n = len(df.collect())
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return n, len(sc.statusTracker().getJobIdsForGroup(group)), df
+
+    before, jobs_before, _ = jobs_of(f"dv-before-{uuid.uuid4()}")
     qt.delete([("l_orderkey", "<", 300)], mode="dv")
-    qt.delete([("l_extendedprice", ">", 90000.0)], mode="dv")
-    expect = li.filter("l_orderkey >= 300 AND l_extendedprice <= 90000.0")
-
-    fast = qt.to_df()          # cardinalities are tiny -> fast path
-    assert fast.count() == expect.count()
-    assert fast.exceptAll(expect).count() == 0
-    assert expect.exceptAll(fast).count() == 0
-    # sampling + range read compose with the broadcast mask
-    pred = [("l_orderkey", ">=", 500), ("l_orderkey", "<", 900)]
-    assert qt.read(pred).count() == expect.filter(
-        "l_orderkey >= 500 AND l_orderkey < 900").count()
-
-    monkeypatch.setattr(DVm, "_SMALL_DV_MAX_POSITIONS", 0)
-    qt2 = qss.QbeastTable.for_path(spark, p)
-    slow = qt2.to_df()         # forced distributed anti-join
-    assert slow.count() == expect.count()
-    assert slow.exceptAll(expect).count() == 0
+    assert any(f.dv for f in qt.snapshot(refresh=True).files.values())
+    after, jobs_after, df = jobs_of(f"dv-after-{uuid.uuid4()}")
+    assert 0 < after < before
+    assert jobs_after == jobs_before
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" not in plan and "Join" not in plan
 
 
 def test_zero_cardinality_descriptors_fast_path(spark, tmp_path):
@@ -328,58 +427,87 @@ def test_zero_cardinality_descriptors_fast_path(spark, tmp_path):
     assert out.count() == 10
 
 
-def test_small_dv_cache_bounded_by_positions(spark, tmp_path):
-    """r9 advice: the driver-side decoded-position cache is bounded by
-    TOTAL decoded positions, not entry count, and drops oldest entries
-    once the budget is exceeded."""
-    import numpy as np
+# -- file URIs: Spark's _metadata.file_path string ------------------------
 
-    from qbeast_spark_spark.sources import deletion_vectors as dvm
+def test_file_uri_matches_spark_file_path(spark, tmp_path):
+    """``_file_uri`` reproduces Hadoop's ``Path.toUri()`` string, which
+    keeps ``= , + @`` and non-ASCII letters and quotes spaces, ``%``,
+    ``#``, quotes and non-ASCII space/control characters."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    # reset, then insert synthetic entries through the real path
-    dvm._SMALL_DV_CACHE = None
-    table = str(tmp_path / "t")
-    os.makedirs(table, exist_ok=True)
-    per_entry = 200_000
-    for i in range(4):
-        # each entry masks a distinct position range -> distinct payload
-        pos = np.arange(i, i + per_entry, dtype=np.int64)
-        data = dvm.roaring_array_encode(pos)
-        sidecar = os.path.join(table, f"dv{i}.bin")
-        off, size = dvm.write_dv_file(sidecar, data)
-        desc = dvm.DVDescriptor("p", sidecar, off, size, per_entry)
-        dvm._small_dv_frame(spark, [(f"{table}/f{i}.parquet", desc)],
-                            table)
-    total = sum(n for (_p, n, _w) in dvm._SMALL_DV_CACHE.values())
-    assert total <= dvm._SMALL_DV_CACHE_MAX_TOTAL_POSITIONS
-    assert 1 <= len(dvm._SMALL_DV_CACHE) <= 5
-    dvm._SMALL_DV_CACHE = None
+    from qbeast_spark_spark.sources.deletion_vectors import _file_uri
+
+    for name in ["k=v,a+b@c é", "p%25q#r;s&t$u!v'(w)~x",
+                 "nb sp　x\u0085y", "emoji\U0001F600z",
+                 'quo"te<>^`|']:
+        f = str(tmp_path / name / "f ile.parquet")
+        os.makedirs(os.path.dirname(f))
+        pq.write_table(pa.table({"a": [1]}), f)
+        got = spark.read.parquet(f).select("_metadata.file_path").first()[0]
+        assert _file_uri(f) == got
 
 
-def test_small_dv_cache_evicts_stopped_sessions(spark, tmp_path):
-    """Entries keyed to a stopped (or collected) session are purged on
-    the next call rather than pinning the dead session forever."""
-    import weakref
-    from collections import OrderedDict
+def test_dv_delete_and_read_under_special_character_directory(
+        spark, tmp_path, lineitem):
+    """A DV delete on a table under a ``k=v,a+b@c é`` directory maps the
+    scan's file URIs back to its files, and reads drop the masked rows."""
+    p = str(tmp_path / "k=v,a+b@c é" / "t")
+    qss.write(lineitem, p, columns_to_index=["l_orderkey"], cube_size=1000)
+    qt = qss.QbeastTable.for_path(spark, p)
+    out = qt.delete([("l_orderkey", "<", 300)], mode="dv")
+    assert out["files_dv"] > 0
+    exp = lineitem.where("l_orderkey >= 300")
+    got = qss.QbeastTable.for_path(spark, p).to_df()
+    assert got.count() == exp.count()
+    assert got.exceptAll(exp).count() == 0
 
-    import pandas as pd
-    from pyspark.sql import functions as F
 
-    from qbeast_spark_spark.sources import deletion_vectors as dvm
+def test_import_partitioned_delta_with_dv(spark, tmp_path, lineitem):
+    """A Delta table whose DV'd data file sits under a ``key=value/``
+    partition directory reads its logical rows."""
+    import pyarrow.parquet as pq
 
-    dvm._SMALL_DV_CACHE = OrderedDict()
-
-    class _DeadSession:            # quacks stopped: _sc is None
-        _sc = None
-
-    dead = _DeadSession()
-    pdf = pd.DataFrame({"file_path": pd.Series(dtype="str"),
-                        "row_index": pd.Series(dtype="int64")})
-    frame = F.broadcast(spark.createDataFrame(
-        pdf, schema="file_path string, row_index long"))
-    dvm._SMALL_DV_CACHE[("dead-key",)] = (frame, 0, weakref.ref(dead))
-    table = str(tmp_path / "t2")
-    os.makedirs(table, exist_ok=True)
-    dvm._small_dv_frame(spark, [], table)   # triggers the sweep
-    assert ("dead-key",) not in dvm._SMALL_DV_CACHE
-    dvm._SMALL_DV_CACHE = None
+    df = lineitem.select("l_orderkey", "l_extendedprice").limit(400)
+    table = str(tmp_path / "delta_part")
+    os.makedirs(os.path.join(table, "_delta_log"))
+    schema = df.withColumn("part", F.lit(0).cast("int")).schema
+    actions = [
+        {"protocol": {"minReaderVersion": 3, "minWriterVersion": 7,
+                      "readerFeatures": ["deletionVectors"],
+                      "writerFeatures": ["deletionVectors"]}},
+        {"metaData": {"id": "t", "format": {"provider": "parquet",
+                                            "options": {}},
+                      "schemaString": schema.json(),
+                      "partitionColumns": ["part"], "configuration": {},
+                      "createdTime": 0}},
+    ]
+    masked = [0, 5, 63, 64]
+    for part in (1, 2):
+        staging = str(tmp_path / f"staging{part}")
+        df.coalesce(1).write.parquet(staging)
+        src = [n for n in os.listdir(staging) if n.endswith(".parquet")][0]
+        rel = f"part={part}/part-00000.parquet"
+        os.makedirs(os.path.join(table, f"part={part}"))
+        shutil.copy(os.path.join(staging, src), os.path.join(table, rel))
+        add = {"path": rel, "partitionValues": {"part": str(part)},
+               "size": 1, "modificationTime": 0, "dataChange": True}
+        if part == 1:
+            uid = uuid.uuid4()
+            off, size = write_dv_file(
+                os.path.join(table, f"deletion_vector_{uid}.bin"),
+                roaring_array_encode(masked))
+            add["deletionVector"] = {
+                "storageType": "u", "pathOrInlineDv": z85_encode(uid.bytes),
+                "offset": off, "sizeInBytes": size,
+                "cardinality": len(masked)}
+        actions.append({"add": add})
+    with open(os.path.join(table, "_delta_log", f"{0:020d}.json"),
+              "w") as fh:
+        for a in actions:
+            fh.write(json.dumps(a) + "\n")
+    rows = pq.read_metadata(os.path.join(
+        table, "part=1/part-00000.parquet")).num_rows
+    got = qss.read_delta_table(spark, table)
+    assert got.where("part = 1").count() == rows - len(masked)
+    assert got.where("part = 2").count() == rows
