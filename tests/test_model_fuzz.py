@@ -27,10 +27,21 @@ def _assert_equal(spark, qt, model: pd.DataFrame, step: str):
     assert g == w, f"{step}: content diverged"
 
 
-@pytest.mark.parametrize("seed", [
-    0xC0FFEE, 7, 20260813, 1010, 31337, 424242, 0xBEEF])
-def test_random_op_sequences_match_model(spark, tmp_table, seed):
+@pytest.mark.parametrize("seed,ckpt_fmt", [
+    (0xC0FFEE, "auto"), (7, "auto"), (20260813, "auto"), (1010, "auto"),
+    (424242, "auto"),
+    # "parquet": a format-2 (parquet) checkpoint every 3 commits instead
+    # of every CHECKPOINT_INTERVAL, so most verbs — and the restore and
+    # time-travel reads — run on checkpoint-seeded snapshots (kernel base
+    # plus a short replayed tail) rather than on a pure JSON replay
+    (0xC0FFEE, "parquet"), (31337, "parquet"), (0xBEEF, "parquet")])
+def test_random_op_sequences_match_model(spark, tmp_table, monkeypatch,
+                                         seed, ckpt_fmt):
     import qbeast_spark_spark as qss
+    from qbeast_spark_spark.sources import log as qlog
+
+    if ckpt_fmt == "parquet":
+        monkeypatch.setattr(qlog, "CHECKPOINT_INTERVAL", 3)
 
     li = load(spark, "lineitem").limit(4000)
     pdf_all = li.toPandas()
@@ -140,6 +151,12 @@ def test_random_op_sequences_match_model(spark, tmp_table, seed):
         qt = qss.QbeastTable.for_path(spark, tmp_table)
         versions[qt.snapshot().version] = model.copy()
         _assert_equal(spark, qt, model, f"step {step_no}:{op}")
+
+    if ckpt_fmt == "parquet":
+        # the cadence took effect: the head is at most 2 commits past
+        # the newest checkpoint
+        last = qlog.CommitLog(tmp_table)._last_checkpoint_version()
+        assert last is not None and qt.snapshot().version - last < 3
 
     # time-travel sweep: every recorded version that is still physically
     # readable must reproduce its model snapshot EXACTLY (vacuum may have
